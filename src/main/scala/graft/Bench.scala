@@ -115,7 +115,8 @@ object Bench {
                  hot: Option[Double] = None, hotN: Option[Int] = None,
                  retimed: Option[Int] = None,
                  retimedDetail: Seq[(String, Double, Double)] = Nil,
-                 qThreshold: Option[Double] = None): String = {
+                 qThreshold: Option[Double] = None,
+                 historyFile: Option[String] = None): String = {
     // qThreshold switches the PER-QUERY (and per-setup) values to the
     // adaptive [[afmt]] rendering; headline/aggregate fields keep
     // `decimals`
@@ -149,7 +150,10 @@ object Bench {
       (if (retimedDetail.isEmpty) ""
        else ",\"retimed_queries\":" + retimedDetail.map { case (k, pre, post) =>
          jstr(k) + s":[${fmt(pre, decimals)},${fmt(post, decimals)}]"
-       }.mkString("{", ",", "}"))
+       }.mkString("{", ",", "}")) +
+      // full-precision file ONLY: the history file that armed the re-time
+      // guard (absent when no history was read)
+      historyFile.map(h => ",\"history_file\":" + jstr(h)).getOrElse("")
     s"""{"metric":"total","value":${fmt(total, decimals)},"unit":"sec","queries":$qs$setupJson$failJson$shadowJson,"sf":${jstr(sf)}}"""
   }
 
@@ -465,7 +469,9 @@ object Bench {
     try {
       val full = renderLine(timings.toSeq, setups.toSeq, failures.toSeq, sfDir, 6,
         shadow = shadow, hot = hot, hotN = hotN, retimed = retimed,
-        retimedDetail = retimedDetail.toSeq)
+        retimedDetail = retimedDetail.toSeq,
+        historyFile =
+          if (history.isEmpty) None else Some(historyPath.toAbsolutePath.toString))
       java.nio.file.Files.write(outPath, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"bench file write failed: $e") }
     spark.stop()

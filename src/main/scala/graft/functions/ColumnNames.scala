@@ -29,6 +29,4 @@ object ColumnNames {
     require(i > 0, s"not a family:qualifier name: $name")
     (name.substring(0, i), name.substring(i + 1))
   }
-
-  def isCombined(name: String): Boolean = name.indexOf(Splitter) > 0
 }

@@ -194,15 +194,20 @@ object KMeans {
             if (sqlGreater(sim, bestSim)) { bestIdx = ci; bestSim = sim }
             ci += 1
           }
-          val (sums, counts) = group(acc, g, e.length)
-          if (sums(bestIdx) == null) sums(bestIdx) = new Array[Double](e.length)
-          val s = sums(bestIdx)
-          var i = 0
-          while (i < e.length) {
-            s(i) += graft.functions.QuantProdSum.roundHalfAway(e(i) * 1e9)
-            i += 1
+          // every similarity -Infinity (zero-quantized-norm centroids and
+          // negative dots): no cluster wins, so the row joins no
+          // centroid's sum or count
+          if (bestIdx >= 0) {
+            val (sums, counts) = group(acc, g, e.length)
+            if (sums(bestIdx) == null) sums(bestIdx) = new Array[Double](e.length)
+            val s = sums(bestIdx)
+            var i = 0
+            while (i < e.length) {
+              s(i) += graft.functions.QuantProdSum.roundHalfAway(e(i) * 1e9)
+              i += 1
+            }
+            counts(bestIdx) += 1
           }
-          counts(bestIdx) += 1
           acc
         },
         combOp = (a, b) => {

@@ -401,7 +401,7 @@ object Engine {
     // files carries the OLD physical name, the second the new one, and a
     // filtered aggregate over the renamed column must read both
     // generations correctly — no files rewritten (the per-file name
-    // resolution lives in ParquetRowIO.RowReadSupport; guards and
+    // resolution lives in GraftReaderFactory.open; guards and
     // compaction-migration in GraftCatalogSpec "RENAME COLUMN").
     QueryDef(
       "q84_rename_evolution",
@@ -812,9 +812,8 @@ object Engine {
     // INT keep their narrow physical files; after ALTER COLUMN ... TYPE
     // BIGINT the later insert writes 64-bit values an INT cannot hold.
     // The final aggregate reads BOTH generations through one scan —
-    // ParquetRowIO narrows the projection per file and upcasts values,
-    // Spark's vectorized reader widens natively. The oracle computes the
-    // same totals relationally.
+    // Spark's vectorized reader widens the narrow files natively. The
+    // oracle computes the same totals relationally.
     QueryDef(
       "q100_type_widening",
       (s, dir) => {
@@ -1131,9 +1130,9 @@ object Engine {
     // SUPPORT_COLUMN_DEFAULT_VALUE: inserts that omit a column (or write
     // the DEFAULT keyword) fill CURRENT_DEFAULT; ADD COLUMN ... DEFAULT
     // backfills rows in files written BEFORE the column existed via
-    // EXISTS_DEFAULT — metadata-only, both the vectorized reader and the
-    // row codec fill it per file; SET DEFAULT changes only future
-    // inserts. The oracle replays the insert sequence.
+    // EXISTS_DEFAULT — metadata-only, the vectorized reader fills it per
+    // file; SET DEFAULT changes only future inserts. The oracle replays
+    // the insert sequence.
     QueryDef(
       "q113_column_defaults",
       (s, dir) => {

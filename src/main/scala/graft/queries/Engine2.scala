@@ -72,8 +72,10 @@ object Engine2 {
     * literals with a strict comparison, so ties keep the LOWER id —
     * exactly row_number() over (cos DESC, cid) / (d, code) — and Spark's
     * total double ordering (NaN greatest) matches the sort's NaN
-    * placement. */
-  private def annEncode(src: DataFrame, cent: DataFrame, book: DataFrame): DataFrame = {
+    * placement. The codeword fold takes its first candidate
+    * unconditionally, so a subvector whose distances are all NaN gets
+    * the lowest code, as the sort gave it. */
+  private[graft] def annEncode(src: DataFrame, cent: DataFrame, book: DataFrame): DataFrame = {
     graft.functions.QuantProdSum.register(src.sparkSession)
     // cn2 computed IN Spark (same quant_dot the joins used) at collect
     // time, so the literal carries bit-identical norms
@@ -113,7 +115,7 @@ object Engine2 {
             |      bc.code AS code,
             |      quant_dist2(slice(e, jj * 8 + 1, 8), bc.cv, 1e9) AS d)),
             |    struct(CAST(-1 AS BIGINT) AS code, CAST('Infinity' AS DOUBLE) AS d),
-            |    (best, s) -> CASE WHEN s.d < best.d THEN s ELSE best END
+            |    (best, s) -> CASE WHEN best.code < 0 OR s.d < best.d THEN s ELSE best END
             |  ).code AS code))""".stripMargin)).as("jc"))
       .select(col("vid"), col("jc.j").as("j"), col("jc.code").as("code"),
         col("list_id"))

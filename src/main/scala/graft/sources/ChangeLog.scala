@@ -324,8 +324,9 @@ object ChangeLog {
   }
 
   /** Write a change DataFrame as parquet part files under `dir` through
-    * the table writer — same codec as data files, so the streaming
-    * reader's [[ParquetRowIO]] reads them back. Handles failed or
+    * the table writer — same codec as data files, so the streaming feed
+    * decodes them with the scan's reader ([[GraftReaderFactory.rows]]).
+    * Handles failed or
     * speculative task attempts the same way compaction does: only files
     * named in the commit messages survive. */
   private def writeChangeFiles(

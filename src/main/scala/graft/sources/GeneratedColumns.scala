@@ -24,9 +24,6 @@ object GeneratedColumns {
   val MetadataKey: String =
     org.apache.spark.sql.catalyst.util.GeneratedColumn.GENERATION_EXPRESSION_METADATA_KEY
 
-  def hasGenerated(schema: StructType): Boolean =
-    schema.fields.exists(_.metadata.contains(MetadataKey))
-
   /** (field ordinal, bound expression) per generated column, resolved and
     * coerced by the active session's analyzer. MUST be called on the
     * driver; the result is serializable for executor-side eval. Returns

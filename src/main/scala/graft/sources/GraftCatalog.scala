@@ -296,7 +296,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       case rm: TableChange.RemoveProperty => props -= rm.property()
       case add: TableChange.AddColumn if add.fieldNames().length == 1 =>
         // schema evolution: new column appended; existing files read NULL
-        // for it (ParquetRowIO fills fields missing from a file's schema)
+        // for it (the vectorized reader fills fields a file lacks)
         val name = add.fieldNames()(0)
         // name-based reading means any name that ever carried data in old
         // files (renamed-away OR dropped) would surface THOSE bytes as
@@ -310,9 +310,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
         // ADD COLUMN ... DEFAULT v: CURRENT_DEFAULT fills future inserts
         // that omit the column (Spark's analyzer reads it from the field
         // metadata); EXISTS_DEFAULT is the value rows in files written
-        // BEFORE this change read back (both the vectorized reader and
-        // the row codec fill it for file-missing columns) — a
-        // metadata-only backfill, no files touched.
+        // BEFORE this change read back (the vectorized reader fills it
+        // for file-missing columns) — a metadata-only backfill, no files
+        // touched.
         val field0 = org.apache.spark.sql.types.StructField(
           name, add.dataType(), nullable = true)
         val field = Option(add.defaultValue()).fold(field0) { dv =>
@@ -363,9 +363,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
         props = GraftCatalog.renameInColumnListProps(props, from, to)
       case up: TableChange.UpdateColumnType if up.fieldNames().length == 1 =>
         // metadata-only TYPE WIDENING: old files keep their narrow
-        // physical encoding, readers upcast per value (ParquetRowIO
-        // narrows the projection per file; Spark's vectorized reader
-        // widens natively), new writes use the wide type. Only lossless
+        // physical encoding, Spark's vectorized reader widens them
+        // natively, new writes use the wide type. Only lossless
         // promotions are legal.
         val name = up.fieldNames()(0)
         import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
@@ -862,8 +861,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
 
   // ---- shallow clone plumbing ([[ShallowClone]]) -------------------------
 
-  private[sources] def tableDirOf(ident: Identifier): String =
-    tablePath(ident).toString
   private[sources] def fullNameOf(ident: Identifier): String = fullName(ident)
 
   /** Create the clone's table shell: same schema, same PARTITION SPEC

@@ -47,7 +47,8 @@ import org.apache.spark.unsafe.types.UTF8String
 final class GraftChangeFeedTable(
     baseSchema: StructType,
     tableDir: String,
-    startingVersion: Long)
+    startingVersion: Long,
+    renames: Map[String, Seq[String]])
     extends Table with SupportsRead {
 
   // data columns are forced nullable: delete rows carry NULL in every
@@ -68,7 +69,8 @@ final class GraftChangeFeedTable(
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = feedSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new GraftChangeFeedStream(baseSchema, s"$tableDir/data", startingVersion)
+          new GraftChangeFeedStream(baseSchema, s"$tableDir/data", startingVersion,
+            renames)
         override def description(): String = name()
       }
     }
@@ -119,7 +121,8 @@ final case class ChangeRemovedPartition(
 final class GraftChangeFeedStream(
     baseSchema: StructType,
     dataDir: String,
-    startingVersion: Long)
+    startingVersion: Long,
+    renames: Map[String, Seq[String]] = Map.empty)
     extends MicroBatchStream {
 
   private def open(): (org.apache.hadoop.fs.FileSystem, Path) = {
@@ -242,13 +245,17 @@ final class GraftChangeFeedStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftChangeFeedReaderFactory(baseSchema)
+    new GraftChangeFeedReaderFactory(baseSchema, renames)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-final class GraftChangeFeedReaderFactory(baseSchema: StructType)
+/** Rows of the feed. Data and change files decode through the table
+  * scan's reader ([[GraftReaderFactory.rows]]), so renamed, widened and
+  * defaulted columns read back exactly as a scan reads them. */
+final class GraftChangeFeedReaderFactory(
+    baseSchema: StructType, renames: Map[String, Seq[String]])
     extends PartitionReaderFactory {
 
   private val keyOrdinal =
@@ -274,15 +281,11 @@ final class GraftChangeFeedReaderFactory(baseSchema: StructType)
         val joined = new JoinedRow
         val keys: Array[String] =
           updateKeys.map(_.value).getOrElse(Array.empty)
-        val reader = ParquetRowIO.newReader(
-          new Path(path), baseSchema, new Configuration(), None)
+        val reader = GraftReaderFactory.rows(path, baseSchema, renames)
         new PartitionReader[InternalRow] {
-          private var current: InternalRow = _
-          override def next(): Boolean = {
-            current = reader.read()
-            current != null
-          }
+          override def next(): Boolean = reader.next()
           override def get(): InternalRow = {
+            val current = reader.get()
             val isUpdate = keys.length > 0 && keyOrdinal >= 0 &&
               !current.isNullAt(keyOrdinal) &&
               contains(keys, current.getUTF8String(keyOrdinal).toString)
@@ -317,15 +320,11 @@ final class GraftChangeFeedReaderFactory(baseSchema: StructType)
         val verRow = new GenericInternalRow(1)
         verRow.update(0, version)
         val joined = new JoinedRow
-        val reader = ParquetRowIO.newReader(new Path(path),
-          ChangeLog.changeSchema(baseSchema), new Configuration(), None)
+        val reader = GraftReaderFactory.rows(path,
+          ChangeLog.changeSchema(baseSchema), renames)
         new PartitionReader[InternalRow] {
-          private var current: InternalRow = _
-          override def next(): Boolean = {
-            current = reader.read()
-            current != null
-          }
-          override def get(): InternalRow = joined.apply(current, verRow)
+          override def next(): Boolean = reader.next()
+          override def get(): InternalRow = joined.apply(reader.get(), verRow)
           override def close(): Unit = reader.close()
         }
 
@@ -340,21 +339,19 @@ final class GraftChangeFeedReaderFactory(baseSchema: StructType)
             case (k, ds) if ds > fileSeq => k
           }.distinct.sorted
         }
-        val reader = ParquetRowIO.newReader(
-          new Path(path), baseSchema, new Configuration(), None)
+        val reader = GraftReaderFactory.rows(path, baseSchema, renames)
         new PartitionReader[InternalRow] {
-          private var current: InternalRow = _
+          // rows an earlier equality delete already suppressed are not
+          // deletes of THIS commit — skip them
+          private def dropped(r: InternalRow): Boolean =
+            dropKeys.length > 0 && keyOrdinal >= 0 && !r.isNullAt(keyOrdinal) &&
+              contains(dropKeys, r.getUTF8String(keyOrdinal).toString)
           override def next(): Boolean = {
-            current = reader.read()
-            // rows an earlier equality delete already suppressed are not
-            // deletes of THIS commit — skip them
-            while (current != null && dropKeys.length > 0 && keyOrdinal >= 0 &&
-                !current.isNullAt(keyOrdinal) &&
-                contains(dropKeys, current.getUTF8String(keyOrdinal).toString))
-              current = reader.read()
-            current != null
+            var more = reader.next()
+            while (more && dropped(reader.get())) more = reader.next()
+            more
           }
-          override def get(): InternalRow = joined.apply(current, meta)
+          override def get(): InternalRow = joined.apply(reader.get(), meta)
           override def close(): Unit = reader.close()
         }
     }

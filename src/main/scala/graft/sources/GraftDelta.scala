@@ -20,8 +20,9 @@ import graft.functions.ColumnNames
   * Commit registers both in the manifest; nothing existing is rewritten
   * or unregistered. At 100 TB that turns "DELETE one user's rows" from a
   * rewrite of every touched file into a few KB of key lists — reads pay
-  * a per-row hash probe ([[GraftReaderFactory]]) until compaction folds
-  * the deletes in.
+  * a per-row hash probe over the decoded batches, and emit rows instead
+  * of batches ([[GraftReaderFactory]]), until compaction folds the
+  * deletes in.
   *
   * Spark drives this through WriteDelta: the scan (a completely normal
   * [[GraftScan]] — filters push down, no group tracking) finds matching

@@ -169,8 +169,7 @@ final class GraftMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, Array.empty, columnar = false,
-      renames = renames)
+    new GraftReaderFactory(required, Array.empty, renames = renames)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

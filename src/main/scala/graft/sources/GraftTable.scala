@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -19,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{ColumnNames, RowKeyGenerator}
 
-/** A graft-catalog table: parquet part-files under `<dir>/data/`, scanned
-  * and written by [[ParquetRowIO]]. Read path does column pruning and
+/** A graft-catalog table: parquet part-files under `<dir>/data/`, written
+  * by [[ParquetRowIO]] and scanned by Spark's vectorized parquet reader
+  * ([[GraftReaderFactory]]). Read path does column pruning and
   * best-effort predicate pushdown (row-group/page skipping via
   * [[FilterTranslate]]) while reporting every filter as residual — the
   * correct-semantics version of the reference's `HBaseTableScanExec` +
@@ -403,8 +403,9 @@ object GraftTable {
   /** RENAME COLUMN history, persisted as a table property:
     * `cur:old2|old1,cur2:oldA` — per current name, its former names
     * newest first. A rename is metadata-only (no files rewritten); the
-    * row codec resolves each requested column per file against this
-    * history, and new writes always use the current name. */
+    * reader resolves each requested column per file against this
+    * history ([[GraftReaderFactory.open]]), and new writes always use the
+    * current name. */
   val RenamesProp = "graft.renames"
 
   /** Comma-separated names of columns WIDENED by ALTER COLUMN ... TYPE
@@ -2267,29 +2268,6 @@ final class GraftScan(
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
         planInputPartitions().length)
 
-  /** Columnar (vectorized) reads are used when every required column is a
-    * primitive the vectorized parquet reader supports; UDT/nested columns
-    * fall back to the row codec. Decided globally per scan — Spark
-    * requires all partitions of one scan to agree on batch-vs-row. */
-  private def columnarOK: Boolean = {
-    import org.apache.spark.sql.types._
-    !wantFile && !wantVersion &&
-    // outstanding equality deletes need the per-row key probe of the row
-    // codec; compaction folds them in and restores the vectorized path
-    deleteKeys.isEmpty &&
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.columnar.enabled", "true") == "true" &&
-    required.fields.nonEmpty &&
-    // a renamed required column may live under a former name in
-    // pre-rename files; only the row codec resolves names per file
-    required.fieldNames.forall(n => !renames.contains(n)) &&
-    required.fields.forall(_.dataType match {
-      case BooleanType | ByteType | ShortType | IntegerType | LongType |
-          FloatType | DoubleType | StringType | BinaryType | DateType => true
-      case _ => false
-    })
-  }
-
   override def createReaderFactory(): PartitionReaderFactory = {
     // Group-based row-level rewrites (tracker present) must read EVERY
     // surviving row of the files they cover: pushed filters there select
@@ -2297,7 +2275,7 @@ final class GraftScan(
     // decode — a record-level parquet filter would drop rows the rewrite
     // has to carry over.
     new GraftReaderFactory(required,
-      if (tracker.isDefined) Array.empty else pushed, columnarOK, wantFile,
+      if (tracker.isDefined) Array.empty else pushed, wantFile,
       wantVersion, renames, deletesBc, widened,
       incremental = sinceVersion.isDefined)
   }
@@ -2874,8 +2852,16 @@ final case class GraftPartitionGroup(files: Seq[(String, Long, Long)], key: Inte
   override def partitionKey(): InternalRow = key
 }
 
+/** Reads graft data files through Spark's own vectorized parquet reader,
+  * graft's only parquet decoder. Scans emit column batches that feed
+  * whole-stage codegen via ColumnarToRow, the same path the built-in
+  * parquet source takes. The one exception is a scan with outstanding
+  * equality deletes: it emits rows, so each can be probed against the
+  * dead keys. Spark needs every partition of a scan to agree on batches
+  * or rows, and the delete set belongs to the scan, so the choice does
+  * too. */
 final class GraftReaderFactory(
-    required: StructType, pushed: Array[Filter], columnar: Boolean,
+    required: StructType, pushed: Array[Filter],
     wantFile: Boolean = false,
     wantVersion: Boolean = false,
     renames: Map[String, Seq[String]] = Map.empty,
@@ -2906,9 +2892,9 @@ final class GraftReaderFactory(
     .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and)
 
   /** (path, start, end, seq) ranges of a partition; whole files carry
-    * their real length as `end`, so both readers treat every entry as a
-    * range. `seq` is the file's data sequence number for the equality-
-    * delete probe. */
+    * their real length as `end`, so every entry is a range. `seq` is the
+    * file's data sequence number for `_version` and the equality-delete
+    * probe. */
   private def ranges(partition: InputPartition): Seq[(String, Long, Long, Long)] =
     partition match {
       case GraftPartitionGroup(files, _) =>
@@ -2916,129 +2902,35 @@ final class GraftReaderFactory(
       case GraftInputPartition(path, start, end, seq) => Seq((path, start, end, seq))
     }
 
-  /** Read schema: when equality deletes are outstanding the row codec
-    * must surface `row_key` for the probe even if the query pruned it —
-    * appended last and projected back off after the filter. */
+  /** Decoded data columns: when equality deletes are outstanding the probe
+    * needs `row_key` even if the query pruned it — appended last and left
+    * out of the emitted rows. */
   private val needHiddenKey = deletes.nonEmpty &&
     !required.fieldNames.contains(ColumnNames.RowKey)
-  private val readSchema0 =
+  private val dataSchema =
     if (needHiddenKey)
       StructType(required.fields :+ org.apache.spark.sql.types.StructField(
         ColumnNames.RowKey, StringType, nullable = true))
     else required
-  private val keyOrdinal =
-    if (deletes.isEmpty) -1 else readSchema0.fieldNames.indexOf(ColumnNames.RowKey)
+  private val keyOrdinal = dataSchema.fieldNames.indexOf(ColumnNames.RowKey)
 
-  private def openFile(path: String, start: Long, end: Long): org.apache.parquet.hadoop.ParquetReader[InternalRow] = {
-    val conf = new Configuration()
-    ParquetRowIO.newReader(new Path(path), readSchema0, conf,
-      predicate.map(FilterCompat.get),
-      if (end == Long.MaxValue) None else Some((start, end)),
-      renames)
-  }
+  /** `_file` and `_version` ride as per-file constant columns after the
+    * data columns, the order [[GraftScan.readSchema]] uses. */
+  private val constSchema = StructType(
+    (if (wantFile) Seq(org.apache.spark.sql.types.StructField(
+      GraftTable.FileColumnName, StringType, nullable = false)) else Nil) ++
+    (if (wantVersion) Seq(org.apache.spark.sql.types.StructField(
+      GraftTable.VersionColumnName, org.apache.spark.sql.types.LongType,
+      nullable = false)) else Nil))
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    countOpen()
-    val remaining = scala.collection.mutable.Queue(ranges(partition): _*)
-    new PartitionReader[InternalRow] {
-      private var reader: org.apache.parquet.hadoop.ParquetReader[InternalRow] = _
-      private var current: InternalRow = _
-      // keys deleted for the CURRENT file (those whose delete seq is
-      // newer than the file); null = no probe needed for this file
-      private var deadKeys: java.util.HashSet[UTF8String] = _
-      // suffix row holding the requested per-file metadata columns, in
-      // readSchema() order: _file (when wanted), then _version
-      private val nMeta = (if (wantFile) 1 else 0) + (if (wantVersion) 1 else 0)
-      private val fileRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nMeta)
-      private val versionOrdinal = if (wantFile) 1 else 0
-      private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = {
-        while (true) {
-          if (reader == null) {
-            if (remaining.isEmpty) return false
-            val (p, s, e, seq) = remaining.dequeue()
-            reader = openFile(p, s, e)
-            if (wantFile) fileRow.update(0, UTF8String.fromString(p))
-            if (wantVersion) fileRow.setLong(versionOrdinal, seq)
-            deadKeys =
-              if (deletes.isEmpty) null
-              else {
-                val hs = new java.util.HashSet[UTF8String]()
-                deletes.foreach { case (k, dseq) =>
-                  if (dseq > seq) hs.add(UTF8String.fromString(k))
-                }
-                if (hs.isEmpty) null else hs
-              }
-          }
-          current = reader.read()
-          if (current == null) { reader.close(); reader = null }
-          else if (deadKeys == null || keyOrdinal < 0 ||
-              current.isNullAt(keyOrdinal) ||
-              !deadKeys.contains(current.getUTF8String(keyOrdinal)))
-            return true
-          // else: row suppressed by an equality delete — keep scanning
-        }
-        false
-      }
-      override def get(): InternalRow = {
-        val row =
-          if (!needHiddenKey) current
-          else {
-            // project the probe-only row_key back off the row
-            val n = required.length
-            val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(n)
-            var i = 0
-            while (i < n) {
-              if (current.isNullAt(i)) out.update(i, null)
-              else out.update(i, current.get(i, required(i).dataType))
-              i += 1
-            }
-            out
-          }
-        if (nMeta > 0) joined.apply(row, fileRow) else row
-      }
-      override def close(): Unit = if (reader != null) reader.close()
-    }
-  }
+  private def openRange(path: String, start: Long, end: Long, seq: Long) =
+    GraftReaderFactory.open(path, start, end, dataSchema, renames, predicate,
+      constSchema, InternalRow.fromSeq(
+        (if (wantFile) Seq(UTF8String.fromString(path)) else Nil) ++
+          (if (wantVersion) Seq(seq) else Nil)))
 
-  // ---- columnar (vectorized) path ----------------------------------------
-  // Delegates decode to Spark's own VectorizedParquetRecordReader: batches
-  // of on-heap column vectors feed whole-stage codegen via ColumnarToRow,
-  // the same engine-native path the built-in parquet source uses. Schema
-  // evolution still works — the vectorized reader null-fills requested
-  // columns missing from a file's schema.
-
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
-
-  private def openVectorized(path: String, start: Long, end: Long) = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-    val conf = new Configuration()
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
-    // ParquetToSparkSchemaConverter reads these with no defaults
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.CASE_SENSITIVE.key, false)
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_BINARY_AS_STRING.key, false)
-    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
-    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-    predicate.foreach(p =>
-      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, p))
-    // SpecificParquetRecordReaderBase casts to the old-API mapred split
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new Path(path), start, end - start, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    val r = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /* offHeap = */ false, 4096)
-    try {
-      r.initialize(split, ctx)
-      r.initBatch(new StructType(), InternalRow.empty)
-      r.enableReturningBatches()
-      r
-    } catch { case e: Throwable => r.close(); throw e }
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    deletes.isEmpty
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -3050,8 +2942,8 @@ final class GraftReaderFactory(
         while (true) {
           if (reader == null) {
             if (remaining.isEmpty) return false
-            val (p, s, e, _) = remaining.dequeue()
-            reader = openVectorized(p, s, e)
+            val (p, s, e, seq) = remaining.dequeue()
+            reader = openRange(p, s, e, seq)
           }
           if (reader.nextBatch()) return true
           reader.close(); reader = null
@@ -3061,6 +2953,167 @@ final class GraftReaderFactory(
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
         reader.resultBatch()
       override def close(): Unit = if (reader != null) reader.close()
+    }
+  }
+
+  /** The outstanding-deletes probe: walks the decoded batches row by row,
+    * drops rows whose `row_key` a delete newer than the file names, and
+    * emits the rest without the hidden key. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    countOpen()
+    val remaining = scala.collection.mutable.Queue(ranges(partition): _*)
+    new PartitionReader[InternalRow] {
+      import org.apache.spark.sql.vectorized.ColumnarBatch
+      private var reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = _
+      private var batch: ColumnarBatch = _
+      // the emitted view of `batch`: the same column vectors minus the
+      // hidden row_key
+      private var out: ColumnarBatch = _
+      // keys deleted for the CURRENT file (those whose delete seq is
+      // newer than the file); null = no probe needed for this file
+      private var deadKeys: java.util.HashSet[UTF8String] = _
+      private var rowId = 0
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (true) {
+          if (reader == null) {
+            if (remaining.isEmpty) return false
+            val (p, s, e, seq) = remaining.dequeue()
+            reader = openRange(p, s, e, seq)
+            batch = reader.resultBatch()
+            out =
+              if (!needHiddenKey) batch
+              else new ColumnarBatch((0 until batch.numCols)
+                .filter(_ != keyOrdinal).map(batch.column).toArray)
+            rowId = 0
+            val hs = new java.util.HashSet[UTF8String]()
+            deletes.foreach { case (k, dseq) =>
+              if (dseq > seq) hs.add(UTF8String.fromString(k))
+            }
+            deadKeys = if (hs.isEmpty) null else hs
+          }
+          if (rowId < batch.numRows) {
+            val i = rowId
+            rowId += 1
+            if (deadKeys == null || live(i)) {
+              current = out.getRow(i)
+              return true
+            }
+            // else: row suppressed by an equality delete — keep scanning
+          } else if (reader.nextBatch()) {
+            rowId = 0
+            if (out ne batch) out.setNumRows(batch.numRows)
+          } else {
+            reader.close(); reader = null
+          }
+        }
+        false
+      }
+      private def live(i: Int): Boolean = {
+        val keys = batch.column(keyOrdinal)
+        keys.isNullAt(i) || !deadKeys.contains(keys.getUTF8String(i))
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = if (reader != null) reader.close()
+    }
+  }
+}
+
+object GraftReaderFactory {
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+
+  /** Opens Spark's vectorized reader on the row groups of `path` whose
+    * midpoint falls in [start, end) (the standard split rule), decoding
+    * `schema` followed by the per-file constant columns `constants`.
+    *
+    *  - A column the file lacks reads as null, or as its `EXISTS_DEFAULT`
+    *    after `ADD COLUMN ... DEFAULT v`.
+    *  - A column widened by `ALTER COLUMN ... TYPE` decodes from the
+    *    file's narrower type through Spark's int→long/double and
+    *    float→double updaters.
+    *  - UDT columns decode as their sqlType.
+    *  - `renames` (current name → former names, newest first): a file
+    *    written before a RENAME COLUMN carries a former name. Its footer
+    *    is then read once, each column is requested under whichever name
+    *    the file has, and the footer is handed to the reader. Batch
+    *    columns are positional, so nothing is renamed back. */
+  def open(
+      path: String,
+      start: Long,
+      end: Long,
+      schema: StructType,
+      renames: Map[String, Seq[String]] = Map.empty,
+      predicate: Option[org.apache.parquet.filter2.predicate.FilterPredicate] = None,
+      constants: StructType = new StructType(),
+      constantRow: InternalRow = InternalRow.empty): VectorizedParquetRecordReader = {
+    val conf = new Configuration()
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    // ParquetToSparkSchemaConverter reads these with no defaults
+    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.CASE_SENSITIVE.key, false)
+    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_BINARY_AS_STRING.key, false)
+    conf.setBoolean(org.apache.spark.sql.internal.SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
+    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
+    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
+    predicate.foreach(p =>
+      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, p))
+    val physical = StructType(schema.fields.map(f => f.dataType match {
+      case udt: org.apache.spark.sql.types.UserDefinedType[_] => f.copy(dataType = udt.sqlType)
+      case _ => f
+    }))
+    val file = new Path(path)
+    // a file written before a RENAME COLUMN carries the former name: read
+    // its footer once and request each column under the name it has
+    val footer =
+      if (!physical.fieldNames.exists(renames.contains)) None
+      else {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
+        Some((in, org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+          .readFooter(in, org.apache.parquet.format.converter.ParquetMetadataConverter.range(start, end))))
+      }
+    val requested = footer.fold(physical) { case (_, f) =>
+      val has = f.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+      StructType(physical.fields.map(c =>
+        if (has(c.name)) c
+        else renames.getOrElse(c.name, Nil).find(has).fold(c)(n => c.copy(name = n))))
+    }
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    // SpecificParquetRecordReaderBase casts to the old-API mapred split;
+    // the task context copies `conf`, so it is built last
+    val split = new org.apache.hadoop.mapred.FileSplit(file, start, end - start, Array.empty[String])
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val r = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /* offHeap = */ false, 4096)
+    try {
+      footer match {
+        case None => r.initialize(split, ctx)
+        case Some((in, f)) => r.initialize(split, ctx, Some(in), Some(in.newStream()), Some(f))
+      }
+      r.initBatch(constants, constantRow)
+      r
+    } catch { case e: Throwable => r.close(); throw e }
+  }
+
+  /** Every row of one whole file through [[open]]: the change-feed
+    * readers share the scan's decoder instead of carrying their own. */
+  def rows(path: String, schema: StructType,
+      renames: Map[String, Seq[String]] = Map.empty): PartitionReader[InternalRow] = {
+    val reader = open(path, 0L, Long.MaxValue, schema, renames)
+    new PartitionReader[InternalRow] {
+      private var it: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (!it.hasNext) {
+          if (!reader.nextBatch()) return false
+          it = reader.resultBatch().rowIterator()
+        }
+        current = it.next()
+        true
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = reader.close()
     }
   }
 }

@@ -74,17 +74,15 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
         !declared.fieldNames.contains("_commit_version"),
         "graft: change feed over a table whose own columns shadow " +
           "_change_type/_commit_version would be silently ambiguous")
-      // pre-rename files store former physical names the feed's plain
-      // file readers would null-fill — refuse loudly, like the batch feed
-      val storedRenames = GraftTable.parseRenames(meta(dir).map(_._2)
+      // pre-rename files store former physical names: the feed's readers
+      // resolve them per file, like the table scan
+      val renames = GraftTable.parseRenames(meta(dir).map(_._2)
         .getOrElse(Map.empty).getOrElse(GraftTable.RenamesProp, ""))
-      require(storedRenames.isEmpty,
-        "graft: change feed over a renamed-column table is not supported yet")
       val base = StructType(schema.fields.filterNot(f =>
         f.name == "_change_type" || f.name == "_commit_version"))
       val starting = Option(properties.get("starting-version"))
         .map(_.toLong).getOrElse(0L)
-      return new GraftChangeFeedTable(base, dir, starting)
+      return new GraftChangeFeedTable(base, dir, starting, renames)
     }
     // schema agreement with the declaration is enforced on the WRITE
     // path only (GraftTable.validatePathWriteSchema, called from

@@ -4,28 +4,26 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
-import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.api.WriteSupport.WriteContext
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api._
 import org.apache.parquet.schema._
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit => PTimeUnit}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** InternalRow ⇄ parquet for flat schemas, written against the public
-  * parquet-mr API (no Spark-internal reader/writer classes). This powers
-  * the graft DSv2 source's scan and write paths — the capability analog of
-  * the reference's direct HFile reader/writer
+/** InternalRow → parquet for flat schemas, written against the public
+  * parquet-mr API: the graft DSv2 source's write path, the capability
+  * analog of the reference's direct HFile writer
   * (`HBaseFileFormat.scala:70-248`), with Parquet as the at-rest format.
+  * Nothing here reads: every graft read decodes through Spark's
+  * vectorized parquet reader ([[GraftReaderFactory]]).
   *
   * Supported field types: boolean, byte, short, int, long, float, double,
-  * string, binary, date, timestamp, timestamp_ntz.
+  * string, binary, date, timestamp, timestamp_ntz (both INT64 micros).
   */
 object ParquetRowIO {
 
@@ -36,7 +34,7 @@ object ParquetRowIO {
     case other => other
   }
 
-  def messageType(schema: StructType): MessageType = {
+  private def messageType(schema: StructType): MessageType = {
     val b = Types.buildMessage()
     schema.fields.foreach { f =>
       val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
@@ -157,150 +155,5 @@ object ParquetRowIO {
         props.get(WriteProps.BloomNdv).foreach(n => b = b.withBloomFilterNDV(c, n.toLong))
       })
     b.build()
-  }
-
-  // ---- read --------------------------------------------------------------
-
-  private final class FieldConverter(dt: DataType, idx: Int, values: Array[Any])
-      extends PrimitiveConverter {
-    override def addBoolean(v: Boolean): Unit = values(idx) = v
-    // The requested type may be WIDER than the file's physical type
-    // (ALTER COLUMN ... TYPE widening: old files keep their narrow
-    // encoding, the converter upcasts per value) — the long/double arms
-    // below are what make metadata-only type evolution readable.
-    override def addInt(v: Int): Unit = values(idx) = dt match {
-      case ByteType => v.toByte
-      case ShortType => v.toShort
-      case LongType => v.toLong
-      case DoubleType => v.toDouble
-      case _ => v
-    }
-    override def addLong(v: Long): Unit = values(idx) = v
-    override def addFloat(v: Float): Unit = values(idx) = dt match {
-      case DoubleType => v.toDouble
-      case _ => v
-    }
-    override def addDouble(v: Double): Unit = values(idx) = v
-    override def addBinary(v: Binary): Unit = values(idx) = dt match {
-      case StringType => UTF8String.fromBytes(v.getBytes)
-      case _ => v.getBytes
-    }
-  }
-
-  /** Materializes rows of `schema`; only `presentFields` (a subset, in
-    * requested-message order) exist in this file — the rest read their
-    * `prefill` slot: null for plain schema evolution, the column's
-    * EXISTS_DEFAULT for `ADD COLUMN ... DEFAULT v` (metadata-only
-    * backfill of files written before the column existed). */
-  private final class RowMaterializer(
-      schema: StructType, presentFields: Seq[String], prefill: Array[Any])
-      extends RecordMaterializer[InternalRow] {
-    private val values = new Array[Any](schema.length)
-    private val root: GroupConverter = new GroupConverter {
-      private val converters = presentFields.map { name =>
-        val i = schema.fieldIndex(name)
-        new FieldConverter(physical(schema(i).dataType), i, values)
-      }.toArray
-      override def getConverter(i: Int): Converter = converters(i)
-      override def start(): Unit =
-        System.arraycopy(prefill, 0, values, 0, prefill.length)
-      override def end(): Unit = ()
-    }
-    override def getCurrentRecord: InternalRow = new GenericInternalRow(values.clone())
-    override def getRootConverter: GroupConverter = root
-  }
-
-  /** The value rows in files WITHOUT this column read back: the folded
-    * `EXISTS_DEFAULT` literal recorded at `ADD COLUMN ... DEFAULT v` time
-    * (null when the column has no existence default). Evaluated once per
-    * file, in Catalyst-internal form. */
-  private def existenceDefault(f: org.apache.spark.sql.types.StructField): Any =
-    if (!f.metadata.contains("EXISTS_DEFAULT")) null
-    else {
-      val sql = f.metadata.getString("EXISTS_DEFAULT")
-      val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(sql)
-      val cast = org.apache.spark.sql.catalyst.expressions.Cast(
-        parsed, f.dataType, Some("UTC"))
-      require(cast.foldable,
-        s"graft: EXISTS_DEFAULT of ${f.name} is not a literal: $sql")
-      cast.eval(null)
-    }
-
-  /** @param renames current column name → its FORMER names, newest first
-    *   (ALTER TABLE RENAME COLUMN history). A file written before a rename
-    *   carries the old physical name; `init` resolves, PER FILE, each
-    *   requested column to whichever of its names the file actually has —
-    *   a metadata-only rename, no data rewritten. */
-  final class RowReadSupport(
-      requiredSchema: StructType,
-      renames: Map[String, Seq[String]] = Map.empty) extends ReadSupport[InternalRow] {
-    // file-schema name -> requested-schema name, resolved per file
-    private var targetOf: Map[String, String] = Map.empty
-    override def init(context: InitContext): ReadContext = {
-      // request only the columns this file actually has (under current OR
-      // former names); missing ones are filled with null by the
-      // materializer (schema evolution)
-      val fileTypes = context.getFileSchema.getFields.asScala
-        .map(t => t.getName -> t).toMap
-      val fileFields = fileTypes.keySet
-      val resolved: Seq[(org.apache.spark.sql.types.StructField, String)] =
-        requiredSchema.fields.toSeq.flatMap { f =>
-          if (fileFields.contains(f.name)) Some(f -> f.name)
-          else renames.getOrElse(f.name, Nil).find(fileFields.contains).map(f -> _)
-        }
-      targetOf = resolved.map { case (f, inFile) => inFile -> f.name }.toMap
-      // ALTER COLUMN ... TYPE widening: a file written before the change
-      // keeps its narrow physical type. The projection must request what
-      // the FILE stores (parquet-mr rejects primitive mismatches), so
-      // narrow the requested field per file; [[FieldConverter]] upcasts
-      // each value to the requested type.
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      def narrowed(f: org.apache.spark.sql.types.StructField, inFile: String) = {
-        val ft = fileTypes(inFile)
-        if (!ft.isPrimitive) f
-        else (physical(f.dataType), ft.asPrimitiveType().getPrimitiveTypeName) match {
-          case (LongType, PrimitiveTypeName.INT32)
-              if ft.getLogicalTypeAnnotation == null =>
-            f.copy(dataType = IntegerType)
-          case (DoubleType, PrimitiveTypeName.INT32)
-              if ft.getLogicalTypeAnnotation == null =>
-            f.copy(dataType = IntegerType)
-          case (DoubleType, PrimitiveTypeName.FLOAT) => f.copy(dataType = FloatType)
-          case _ => f
-        }
-      }
-      new ReadContext(messageType(
-        StructType(resolved.map { case (f, inFile) =>
-          narrowed(f, inFile).copy(name = inFile) })))
-    }
-    override def prepareForRead(
-        conf: Configuration,
-        keyValueMetaData: java.util.Map[String, String],
-        fileSchema: MessageType,
-        readContext: ReadContext): RecordMaterializer[InternalRow] = {
-      val present = readContext.getRequestedSchema.getFields.asScala
-        .map(f => targetOf(f.getName)).toSeq
-      val presentSet = present.toSet
-      val prefill = requiredSchema.fields.map(f =>
-        if (presentSet.contains(f.name)) null else existenceDefault(f))
-      new RowMaterializer(requiredSchema, present, prefill)
-    }
-  }
-
-  def newReader(
-      path: Path,
-      requiredSchema: StructType,
-      conf: Configuration,
-      filter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter],
-      range: Option[(Long, Long)] = None,
-      renames: Map[String, Seq[String]] = Map.empty)
-      : ParquetReader[InternalRow] = {
-    val b0 = ParquetReader.builder(new RowReadSupport(requiredSchema, renames), path).withConf(conf)
-    val b1 = filter.fold(b0)(b0.withFilter)
-    // byte-range split: only row groups whose midpoint falls in
-    // [start, end) are read — the standard split-assignment rule
-    val b2 = range.fold(b1) { case (s0, e0) => b1.withFileRange(s0, e0) }
-    b2.build()
   }
 }

@@ -75,8 +75,4 @@ object SchemaRegistry {
       TableSpec(table, StructType(rowFields ++ familyFields), generator)
     }
   }
-
-  def loadFile(path: String): Seq[TableSpec] =
-    parseYaml(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
 }

@@ -55,7 +55,11 @@ class ContractSpec extends AnyFunSuite {
       Seq("q99_broken" -> "IllegalStateException: \"queries\":{oops}"),
       "/root/testdata/sf0.1", 6,
       shadow = Some(0.0), hot = Some(1.5), hotN = Some(3), retimed = Some(2),
-      retimedDetail = Seq(("q104_lsh_eval", 3.1, 0.9), ("q120_x", 2.21, 2.3)))
+      retimedDetail = Seq(("q104_lsh_eval", 3.1, 0.9), ("q120_x", 2.21, 2.3)),
+      historyFile = Some("/runs/a/BENCH_LAST.json"))
+    // the file records which history armed the re-time guard
+    assert(line.contains("\"history_file\":\"/runs/a/BENCH_LAST.json\""),
+      line.takeRight(200))
     // the new retimed_queries group (full-precision file only) must not
     // confuse the history parse: it contains the substring `queries":{`
     assert(line.contains("\"retimed_queries\":{\"q104_lsh_eval\":[3.1,0.9]"),

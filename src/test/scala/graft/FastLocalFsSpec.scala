@@ -16,6 +16,12 @@ class FastLocalFsSpec extends AnyFunSuite {
     val conf = new org.apache.hadoop.conf.Configuration()
     assert(conf.get("fs.file.impl") == "graft.sources.FastLocalFileSystem",
       "graft-fs-site.xml must contribute fs.file.impl as a default resource")
+    // the test classpath's core-site.xml sets the same value; the binding
+    // must come from the main jar's resource, or a broken install() hides
+    val sources = Option(conf.getPropertySources("fs.file.impl"))
+      .map(_.toSeq).getOrElse(Nil)
+    assert(sources.contains("graft-fs-site.xml"),
+      s"fs.file.impl must come from graft-fs-site.xml, came from $sources")
     // newInstance bypasses the process FileSystem cache (the JVM may have
     // created a RawLocalFileSystem before install() in test runs)
     val fs = org.apache.hadoop.fs.FileSystem.newInstance(

@@ -1379,9 +1379,9 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("column DEFAULTs fill through the ROW CODEC path (merge-on-read)") {
-    // merge-on-read forces the row-codec reader, covering the
-    // EXISTS_DEFAULT prefill in ParquetRowIO (the vectorized path is
-    // covered by q113)
+    // outstanding merge-on-read deletes make the scan emit rows through
+    // the dead-key probe, covering the EXISTS_DEFAULT fill on that path
+    // (the batch path is covered by q113)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ck")
     spark.sql("""CREATE TABLE graft.ck.mor (row_key STRING, v BIGINT)
                 |TBLPROPERTIES ('write.mutation.mode' = 'merge-on-read')""".stripMargin)

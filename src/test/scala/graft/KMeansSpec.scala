@@ -59,6 +59,20 @@ class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(key(KMeans.update(KMeans.assign(emb, cent))) == key(cent))
   }
 
+  test("a row with every similarity -Infinity joins no centroid (zero-norm centroid, negative dot)") {
+    import spark.implicits._
+    // id 0 seeds the only centroid; its quantized norm Σ round(c²·1e9)
+    // is 0, so ids 1-2 (negative dot) score -Infinity against it, while
+    // id 0 itself scores 0/0 = NaN, which Spark's double order ranks
+    // above -Infinity
+    val emb = Seq(
+      (0L, Seq(-1e-5, -1e-5)), (1L, Seq(1.0, 2.0)), (2L, Seq(3.0, 1.0)))
+      .toDF("id", "e")
+    val got = KMeans.fit(emb, 1, 1).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
+    assert(got == Seq((0, Seq(-1e-5, -1e-5))), got)
+  }
+
   test("fitGrouped is bit-identical to per-group fit (subspaces + mixed dims)") {
     import org.apache.spark.sql.functions._
     val emb = KMeans.embFrame(spark, dir).cache()

@@ -4,17 +4,20 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.ParquetRowIO
+import graft.sources.{GraftReaderFactory, ParquetRowIO}
 
-/** Direct write/read round-trips of the parquet row codec, independent of
-  * the catalog: every supported type, nulls in every position, empty
-  * files, pruned and filtered reads. */
+/** Direct round-trips of the parquet row writer through graft's one
+  * decoder ([[GraftReaderFactory]], Spark's vectorized reader),
+  * independent of the catalog: every supported type, nulls in every
+  * position, empty files, pruned and filtered reads. */
 class ParquetRowIOSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
@@ -28,17 +31,19 @@ class ParquetRowIOSpec extends AnyFunSuite {
   private def tmp(): Path =
     new Path(Files.createTempDirectory("rowio").resolve("t.parquet").toString)
 
-  private def write(path: Path, rows: Seq[InternalRow]): Unit = {
-    val w = ParquetRowIO.newWriter(path, schema, new Configuration())
+  private def write(path: Path, rows: Seq[InternalRow],
+      props: Map[String, String] = Map.empty): Unit = {
+    val w = ParquetRowIO.newWriter(path, schema, new Configuration(), props)
     try rows.foreach(w.write) finally w.close()
   }
 
+  /** Decoded rows are views into the reader's batch: copy each out. */
   private def readAll(path: Path, sch: StructType): Seq[InternalRow] = {
-    val r = ParquetRowIO.newReader(path, sch, new Configuration(), None)
+    val proj = UnsafeProjection.create(sch)
+    val r = GraftReaderFactory.rows(path.toString, sch)
     val buf = scala.collection.mutable.ArrayBuffer[InternalRow]()
-    var row = r.read()
-    while (row != null) { buf += row; row = r.read() }
-    r.close()
+    try while (r.next()) buf += proj(r.get()).copy()
+    finally r.close()
     buf.toSeq
   }
 
@@ -91,5 +96,37 @@ class ParquetRowIOSpec extends AnyFunSuite {
       StructField("added_later", DoubleType)))
     val g = readAll(p, evolved).head
     assert(g.getInt(0) == 1 && g.isNullAt(1))
+  }
+
+  test("filtered read skips the row groups a pushed predicate disproves") {
+    val p = tmp()
+    val n = 20000
+    // small row groups: the writer checks its size every 100+ records
+    write(p, (0 until n).map(i => InternalRow(
+      i % 2 == 0, null, null, i, i.toLong, null, null,
+      UTF8String.fromString(s"row-$i"), null, null, null, null)),
+      Map(ParquetRowIO.WriteProps.RowGroupBytes -> "16384"))
+    val sch = StructType(Seq(schema("i"), schema("str")))
+    def ids(pred: Option[org.apache.parquet.filter2.predicate.FilterPredicate]): Seq[Int] = {
+      val r = GraftReaderFactory.open(p.toString, 0L, Long.MaxValue, sch,
+        predicate = pred)
+      val buf = scala.collection.mutable.ArrayBuffer[Int]()
+      try while (r.nextBatch()) {
+        val rows = r.resultBatch().rowIterator()
+        while (rows.hasNext) {
+          val row = rows.next()
+          assert(row.getUTF8String(1).toString == s"row-${row.getInt(0)}")
+          buf += row.getInt(0)
+        }
+      } finally r.close()
+      buf.toSeq
+    }
+    assert(ids(None) == (0 until n))
+    val low = ids(Some(FilterApi.lt(FilterApi.intColumn("i"), Integer.valueOf(100))))
+    // row-group granular: every match survives, in order, and whole
+    // groups past the bound are never decoded
+    assert(low.take(100) == (0 until 100) && low == low.sorted, low.take(5))
+    assert(low.length < n, s"no row group was skipped (${low.length} rows)")
+    assert(ids(Some(FilterApi.gt(FilterApi.intColumn("i"), Integer.valueOf(n)))).isEmpty)
   }
 }

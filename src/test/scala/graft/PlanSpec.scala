@@ -279,13 +279,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(_.getLong(0)).sorted.toSeq
       // columnar path across ranges
       assert(df.collect().map(_.getLong(0)).sorted.toSeq == want)
-      // row path across the same ranges
-      spark.conf.set("spark.graft.columnar.enabled", "false")
-      assert(spark.sql("SELECT doc_id FROM gpart.t.docs")
-        .collect().map(_.getLong(0)).sorted.toSeq == want)
+      // row path across the same ranges: outstanding equality deletes
+      // make the scan emit rows through the dead-key probe
+      spark.sql(
+        """CREATE TABLE gpart.t.docs_mor
+          |(row_key STRING, doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT)
+          |PARTITIONED BY (lang)
+          |TBLPROPERTIES ('write.mutation.mode' = 'merge-on-read')""".stripMargin)
+      spark.sql(
+        s"""INSERT INTO gpart.t.docs_mor
+           |SELECT CAST(doc_id AS STRING), doc_id, text, lang, n_chars
+           |FROM parquet.`$dir/documents.parquet`""".stripMargin)
+      spark.sql("DELETE FROM gpart.t.docs_mor WHERE doc_id % 5 = 0")
+      val rows = spark.sql("SELECT doc_id FROM gpart.t.docs_mor")
+      assert(rows.rdd.getNumPartitions > 5,
+        s"expected range splits, got ${rows.rdd.getNumPartitions} partitions")
+      val rowPlan = rows.queryExecution.executedPlan.toString
+      assert(!rowPlan.contains("ColumnarToRow"), rowPlan)
+      assert(rows.collect().map(_.getLong(0)).sorted.toSeq == want.filter(_ % 5 != 0))
     } finally {
       spark.conf.unset("spark.graft.split.bytes")
-      spark.conf.set("spark.graft.columnar.enabled", "true")
+      spark.sql("DROP TABLE IF EXISTS gpart.t.docs_mor")
     }
   }
 
@@ -705,13 +719,60 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"SELECT doc_id FROM parquet.`$dir/documents.parquet` WHERE n_chars > 100")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == want)
-    // the toggle falls back to the row codec
-    spark.conf.set("spark.graft.columnar.enabled", "false")
-    try {
-      val rowPlan = spark.sql("SELECT doc_id FROM gpart.t.docs")
-        .queryExecution.executedPlan.toString
-      assert(!rowPlan.contains("ColumnarToRow"), rowPlan)
-    } finally spark.conf.set("spark.graft.columnar.enabled", "true")
+  }
+
+  test("graft source: evolved, timestamp and metadata columns scan columnar; change feed reads them") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.Row
+    val wh = Files.createTempDirectory("graft_wh_evo").toString
+    spark.conf.set("spark.sql.catalog.gevo", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gevo.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gevo.t")
+    spark.sql(
+      "CREATE TABLE gevo.t.evo (id BIGINT, old_name STRING, n INT, ts TIMESTAMP, tsn TIMESTAMP_NTZ)")
+    spark.sql("""INSERT INTO gevo.t.evo VALUES
+                |(1, 'a', 10, TIMESTAMP '2024-01-01 00:00:00',
+                | TIMESTAMP_NTZ '2024-01-01 08:00:00.5')""".stripMargin)
+    // every evolution below is metadata-only: the first file keeps the
+    // old name, the INT encoding and no `tag` column
+    spark.sql("ALTER TABLE gevo.t.evo RENAME COLUMN old_name TO name")
+    spark.sql("ALTER TABLE gevo.t.evo ALTER COLUMN n TYPE BIGINT")
+    spark.sql("ALTER TABLE gevo.t.evo ADD COLUMN tag STRING DEFAULT 'old'")
+    spark.sql("""INSERT INTO gevo.t.evo VALUES
+                |(2, 'b', 3000000000, TIMESTAMP '2024-06-30 12:34:56.789',
+                | TIMESTAMP_NTZ '1969-12-31 23:59:59', 'new')""".stripMargin)
+    val ts1 = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+    val ts2 = java.sql.Timestamp.from(java.time.Instant.parse("2024-06-30T12:34:56.789Z"))
+    val tsn1 = java.time.LocalDateTime.parse("2024-01-01T08:00:00.5")
+    val tsn2 = java.time.LocalDateTime.parse("1969-12-31T23:59:59")
+    val df = spark.sql(
+      "SELECT id, name, n, tag, ts, tsn, _file, _version FROM gevo.t.evo ORDER BY id")
+    val got = df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow"), s"expected a vectorized graft scan:\n$plan")
+    val files = got.map(_.getString(6))
+    assert(files.distinct.length == 2 &&
+      files.forall(f => f.contains(s"$wh/t/evo/data/") && f.endsWith(".parquet")),
+      files.toSeq)
+    assert(got.map(r => Row.fromSeq(r.toSeq.patch(6, Nil, 1))).toSeq == Seq(
+      Row(1L, "a", 10L, "old", ts1, tsn1, 1L),
+      Row(2L, "b", 3000000000L, "new", ts2, tsn2, 2L)))
+
+    // the streaming change feed decodes the same files through the same
+    // reader: both inserts, with the pre-rename file resolved per file
+    val q = spark.readStream.format("graft")
+      .option("change-feed", "true")
+      .load(s"$wh/t/evo")
+      .writeStream.format("memory").queryName("evo_feed")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val feed = spark.sql(
+      """SELECT id, name, n, tag, ts, tsn, _change_type, _commit_version
+        |FROM evo_feed ORDER BY id""".stripMargin).collect().toSeq
+    assert(feed == Seq(
+      Row(1L, "a", 10L, "old", ts1, tsn1, "insert", 1L),
+      Row(2L, "b", 3000000000L, "new", ts2, tsn2, "insert", 2L)), feed)
   }
 
   test("graft source: storage-partitioned aggregation and join avoid shuffles") {

@@ -131,4 +131,18 @@ class QuantProdSumSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getDouble(0) == r.getDouble(1))
     assert(r.getSeq[Double](2) == r.getSeq[Double](3))
   }
+
+  test("annEncode gives an all-NaN subvector the lowest code, like row_number over (d, code)") {
+    import spark.implicits._
+    // subvector 0 is all NaN, so every codeword distance is NaN; the other
+    // seven sit nearer code 5 (0.5) than code 3 (0.3)
+    val src = Seq((7L, Seq.fill(8)(Double.NaN) ++ Seq.fill(56)(0.5))).toDF("vec_id", "e")
+    val cent = Seq((0L, Seq.fill(64)(1.0))).toDF("cid", "ce")
+    val book = (for (j <- 0 until 8; code <- Seq(3L, 5L))
+      yield (code, j, Seq.fill(8)(code / 10.0))).toDF("code", "j", "cv")
+    val got = graft.queries.Engine2.annEncode(src, cent, book)
+      .select("j", "code").collect().map(r => (r.getInt(0), r.getLong(1)))
+      .sortBy(_._1).toSeq
+    assert(got == (0, 3L) +: (1 until 8).map(j => (j, 5L)), got)
+  }
 }

@@ -714,7 +714,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // reading WITH the deletes outstanding: manifest-first planning, no
     // footer opens, bounded registry reads — the delete probe rides the
-    // row codec, never the driver's planning loop
+    // executors' read path, never the driver's planning loop
     val (f0, l0, r0) = (GraftScan.footerReads.get(),
       GraftScan.countStarListings.get(), TableStats.registryReads.get())
     assert(spark.sql("SELECT count(*) FROM graft.mf.morx").head().getLong(0) == 49500L)
