@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point: times every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and emits ONE bare JSON line on stdout (and a
@@ -260,18 +259,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    graft.sources.FastLocalFileSystem.install() // before any file:// use
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // DataSourceV2Strategy WARNs "Can't translate true to source filter"
     // whenever a runtime (DPP) filter folds to a literal — Spark-internal,
     // harmless (the filter stays residual), but it spams one line per
@@ -281,7 +270,6 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.datasources.v2.DataSourceV2Strategy",
       org.apache.logging.log4j.Level.ERROR)
-    graft.types.RegionSpanUDT.register()
     // JVM/codegen warmup so the first timed query isn't charged for it
     spark.range(0, 1000000).selectExpr("sum(id)", "count(distinct id % 7)").collect()
 

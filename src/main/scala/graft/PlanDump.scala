@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Round-13 deliverable aid: dump `explain("formatted")` for named queries
-  * to files (plans/r13/<qNN>_{before,after}.txt). Usage:
+/** Dump `explain("formatted")` for named queries to files
+  * (plans/<round>/<qNN>_{before,after}.txt). Usage:
   * `PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>` — runs each query's
   * declared setup first (plans of index serves depend on the fixture),
   * then renders the plan of the query's returned DataFrame without
@@ -12,22 +10,11 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    graft.sources.FastLocalFileSystem.install() // before any file:// use
     val dir = args(0)
     val out = args(1)
     val suffix = args(2)
     val names = args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.types.RegionSpanUDT.register()
+    val spark = GraftSession.create()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     for (d <- SparkEntry.allDefs.sortBy(_.name)
         if names(d.name) || names(Bench.shortKey(d.name))) {

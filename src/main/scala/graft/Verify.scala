@@ -1,25 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    graft.sources.FastLocalFileSystem.install() // before any file:// use
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (local iteration aid)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.types.RegionSpanUDT.register()
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // A failing query must surface as a RED row in the driver's correctness
     // artifact, not vanish (round 5 shipped 116 rows for 123 declared

@@ -16,13 +16,6 @@ object Engine3 {
   private def ensureCatalog(s: SparkSession, dir: String): String =
     Engine.ensureCatalog(s, dir)
 
-  /** The corpus tokenization every text gate shares (q69/q71): split on
-    * single spaces; NULL text yields no postings and a NULL doc length. */
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(col("text"), " ").as("sp"))
-      .withColumn("dl", size(col("sp")).cast("long"))
-
   /** Exactly q71's BM25 per-(doc, term) partial: rational idf variant
     * (no log — keeps both engines bit-identical), quantized to integer
     * micros BEFORE the per-doc sum so aggregation order cannot matter. */
@@ -30,85 +23,22 @@ object Engine3 {
     "round(((nd - df + 0.5) / (df + 0.5)) * tf * 2.2 / " +
       "(tf + 1.2 * (0.25 + 0.75 * dl / (sl / nd))) * 1e6)"
 
+  /** [[bm25Part]]'s corpus constants (sl, nd) as doubles, summed over a
+    * `fts2_glob` constants log (every fold appends its ± rows). */
+  private def bm25Consts(glob: DataFrame): DataFrame =
+    glob.agg(sum(col("sl")).cast("double").as("sl"),
+      sum(col("nd")).cast("double").as("nd"))
+
   /** [[Vectors]]' integer-exact embedding arithmetic (per-element products
     * quantized at 1e9 — sums of exact integers in double, order-free). */
   private val n2E = "quant_dot(%1$s, %1$s, 1e9)"
   private val dotE = "quant_dot(%s, %s, 1e9)"
 
-  /** Per-(doc, term) BM25 scores served from the persisted index — the
-    * ONE sparse-retrieval routine q161 and q164 share. */
-  private def bm25Scores(s: SparkSession, ns: String, terms: Seq[String]): DataFrame = {
-    val post = s.table(s"$ns.fts_post").where(col("tok").isin(terms: _*))
-    val dfx = post.groupBy(col("tok"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val glob = s.table(s"$ns.fts_glob")
-      .select(col("sl").cast("double").as("sl"),
-        col("nd").cast("double").as("nd"))
-    post.join(broadcast(dfx), "tok")
-      .crossJoin(broadcast(glob))
-      .withColumn("part", expr(bm25Part))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("part")).as("score"))
-  }
-
-  /** Process-local fixture memo for the STATIC read-only index tables:
-    * fts_post/fts_glob (6 gates), fts_pos (3 gates) are deterministic
-    * functions of the corpus, are never mutated by any consumer (only
-    * their builders drop/write them — grep-verified), yet every serving
-    * gate's setup rebuilds them identically. Within ONE process the
-    * repeat builds are pure waste; a key is added only AFTER a build
-    * completes, so a failed build retries. Scoped per (warehouse, dir):
-    * a fresh process — every driver invocation, every isolated gate run —
-    * always rebuilds from the parquet inputs, so nothing persists across
-    * bench/oracle runs. */
-  private val staticBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def buildOnceKey(s: SparkSession, kind: String, dir: String, ns: String): String =
-    s"$kind|${s.conf.get(s"spark.sql.catalog.${ns.split('.')(0)}.warehouse")}|$dir|$ns"
-
-  /** Build the q162 positional index (idempotent) — shared by q162/q177. */
-  private def buildPosIndex(s: SparkSession, dir: String, ns: String): Unit = {
-    val once = buildOnceKey(s, "fts_pos", dir, ns)
-    if (staticBuilt.contains(once)) return
-    s.sql(s"DROP TABLE IF EXISTS $ns.fts_pos")
-    s.sql(s"CREATE TABLE $ns.fts_pos (tok STRING, doc_id BIGINT, pos BIGINT)")
-    val toks = tokenized(s, dir)
-    toks
-      .select(col("doc_id"), posexplode(col("sp")).as(Seq("pos", "tok")))
-      .select(col("tok"), col("doc_id"), col("pos").cast("long").as("pos"))
-      .repartitionByRange(fts2ShardCount(toks), col("tok"))
-      .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))
-      .writeTo(s"$ns.fts_pos").append()
-    staticBuilt.add(once)
-  }
-
-  /** Build the q161 index tables (idempotent) — shared by q161/q164. */
-  private def buildFtsIndex(s: SparkSession, dir: String, ns: String): Unit = {
-    val once = buildOnceKey(s, "fts_post", dir, ns)
-    if (staticBuilt.contains(once)) return
-    s.sql(s"DROP TABLE IF EXISTS $ns.fts_post")
-    s.sql(s"DROP TABLE IF EXISTS $ns.fts_glob")
-    s.sql(s"CREATE TABLE $ns.fts_post (tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT)")
-    s.sql(s"CREATE TABLE $ns.fts_glob (nd BIGINT, sl BIGINT)")
-    val docs = tokenized(s, dir)
-    docs.agg(count(lit(1)).cast("long").as("nd"),
-        sum(col("dl")).cast("long").as("sl"))
-      .select(col("nd"), col("sl"))
-      .writeTo(s"$ns.fts_glob").append()
-    // range-clustered postings: files carry disjoint [min, max] token
-    // ranges in the registry, the precondition for IN-list file pruning
-    // at serve time; the shard count derives from the corpus' planned
-    // bytes ([[fts2ShardCount]]), so a 100 TB build fans out while a
-    // test corpus lands in one file — the clustering shape is the same
-    docs.select(col("doc_id"), col("dl"), explode(col("sp")).as("tok"))
-      .groupBy(col("tok"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .repartitionByRange(fts2ShardCount(docs), col("tok"))
-      .sortWithinPartitions(col("tok"), col("doc_id"))
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-      .writeTo(s"$ns.fts_post").append()
-    staticBuilt.add(once)
-  }
+  /** The namespace every read-only full-text gate (q161, q162, q164,
+    * q176-q178, q180-q182) serves from: the maintained index seeded
+    * with the whole corpus ([[fts2SeedCorpus]]) and never mutated, so it
+    * carries no tombstones and its serves plan no survival join. */
+  private val ftsServe = "gcat.fts_serve"
 
   // ---- q170 shared helpers (used by both its setup and its run, and
   // driven directly by FtsSpec's delta-path / crash pins) ------------------
@@ -414,8 +344,9 @@ object Engine3 {
     fts2FoldFrames(s, ns, post, pos, glob, newVersion, expect, dictExpect)
   }
 
-  /** Process-memoized WHOLE-CORPUS seed fold: seven maintained-index
-    * gates each seed their OWN namespace with the same deterministic fold
+  /** Process-memoized WHOLE-CORPUS seed: every maintained full-text
+    * namespace the gates use (the read-only [[ftsServe]] and seven
+    * maintenance gates' own) starts from the same deterministic fold
     * input (tokenize + token-clustering of the full corpus, stamped at
     * the same seed version — fresh tables commit identically).
     *
@@ -434,51 +365,72 @@ object Engine3 {
     * partition per file, so the donor's range-sharded files land 1:1 in
     * the copy with identical clustering and registry ranges.
     *
+    * Re-seeding the donor ITSELF cannot copy (recreating its tables
+    * drops the rows a copy reads): while its tables still stand at the
+    * seed versions it already holds exactly the seed and nothing runs;
+    * once mutated it folds inline again and re-registers.
+    *
     * Process-local (never reused across bench/oracle invocations: every
-    * run re-computes from the parquet inputs) and keyed on the stamped
-    * version, so a namespace whose seed would land at a different rev
-    * computes fresh. Value: (donor ns, post version, pos version, nd, sl). */
-  private val seedFoldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long, Long, Long)]()
+    * run re-computes from the parquet inputs). Value: (donor ns, src
+    * version, post version, pos version, glob version). */
+  private val seedFoldCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, Long, Long, Long, Long)]()
 
-  private[graft] def fts2SeedFold(s: SparkSession, ns: String, dir: String,
-      newVersion: Long): Unit = {
+  /** (Re)create `ns`'s maintained index tables, ingest the whole corpus
+    * as the row-keyed `fts2_src` (row-level DELETE/UPDATE need the key)
+    * and seed the index from it through the donor memo. Returns the
+    * source version the seed is stamped at. */
+  private[graft] def fts2SeedCorpus(s: SparkSession, ns: String,
+      dir: String): Long = {
+    ensureCatalog(s, dir)
     // the sharding confs shape the donor's file layout — a same-process
     // caller running under different sharding must not reuse a donor
     // built under the old values (round-13 ADVICE)
-    val key = s"$dir|$newVersion|" +
+    val key = s"$dir|" +
       s"${s.conf.getOption("graft.index.targetShardBytes").getOrElse("")}|" +
       s"${s.conf.getOption("graft.index.maxShards").getOrElse("")}"
-    Option(seedFoldCache.get(key)) match {
-      case None =>
-        val batch = s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        // persist the tokenization once: the transaction writes THREE
-        // frames derived from it (postings, positions, constants) and
-        // would otherwise re-split the whole corpus per frame
-        val shards = fts2ShardCount(batch)
-        val docs = fts2Tokenize(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (post, pos, glob) = fts2IndexRowsFromDocs(docs, newVersion, shards)
-          fts2FoldFrames(s, ns, post, pos, glob, newVersion, None, None)
-        } finally docs.unpersist(blocking = false)
-        val g = s.table(s"$ns.fts2_glob")
-          .agg(sum(col("nd")).cast("long"), sum(col("sl")).cast("long")).first()
-        seedFoldCache.putIfAbsent(key, (ns,
-          tableVersion(s, ns, "fts2_post"), tableVersion(s, ns, "fts2_pos"),
-          g.getLong(0), g.getLong(1)))
-      case Some((donor, postV, posV, nd, sl)) =>
-        val post = s.read.option("snapshot-version", postV)
-          .table(s"$donor.fts2_post")
-          .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("rev"))
-          .sortWithinPartitions(col("tok"), col("doc_id"))
-        val pos = s.read.option("snapshot-version", posV)
-          .table(s"$donor.fts2_pos")
-          .select(col("tok"), col("doc_id"), col("pos"), col("rev"))
-          .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))
-        val glob = s.range(1).select(lit(nd).as("nd"), lit(sl).as("sl"))
-        fts2FoldFrames(s, ns, post, pos, glob, newVersion, None, None)
+    val memo = Option(seedFoldCache.get(key))
+    memo match {
+      case Some((`ns`, v1, postV, posV, _)) if standsAt(s, ns,
+          "fts2_src" -> v1, "fts2_post" -> postV, "fts2_pos" -> posV) => v1
+      case _ =>
+        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $ns")
+        fts2Create(s, ns, withRowKey = true)
+        s.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id").cast("string").as("row_key"),
+            col("doc_id"), col("text"))
+          .writeTo(s"$ns.fts2_src").append()
+        val v1 = fts2SrcVersion(s, ns)
+        memo match {
+          case Some((donor, `v1`, postV, posV, globV)) if donor != ns =>
+            val post = s.read.option("snapshot-version", postV)
+              .table(s"$donor.fts2_post")
+              .select(col("tok"), col("doc_id"), col("tf"), col("dl"), col("rev"))
+              .sortWithinPartitions(col("tok"), col("doc_id"))
+            val pos = s.read.option("snapshot-version", posV)
+              .table(s"$donor.fts2_pos")
+              .select(col("tok"), col("doc_id"), col("pos"), col("rev"))
+              .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))
+            val glob = s.read.option("snapshot-version", globV)
+              .table(s"$donor.fts2_glob").select(col("nd"), col("sl"))
+            fts2FoldFrames(s, ns, post, pos, glob, v1, None, None)
+          case _ =>
+            val batch = s.read.parquet(s"$dir/documents.parquet")
+              .select(col("doc_id"), col("text"))
+            // persist the tokenization once: the transaction writes THREE
+            // frames derived from it (postings, positions, constants) and
+            // would otherwise re-split the whole corpus per frame
+            val shards = fts2ShardCount(batch)
+            val docs = fts2Tokenize(batch)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val (post, pos, glob) = fts2IndexRowsFromDocs(docs, v1, shards)
+              fts2FoldFrames(s, ns, post, pos, glob, v1, None, None)
+            } finally docs.unpersist(blocking = false)
+            seedFoldCache.put(key, (ns, v1, tableVersion(s, ns, "fts2_post"),
+              tableVersion(s, ns, "fts2_pos"), tableVersion(s, ns, "fts2_glob")))
+        }
+        v1
     }
   }
 
@@ -749,9 +701,7 @@ object Engine3 {
       pin.table("fts2_post").where(col("tok").isin(terms: _*)), tombMax)
     val dfx = post.groupBy(col("tok"))
       .agg(count(lit(1)).cast("double").as("df"))
-    val glob = pin.table("fts2_glob")
-      .agg(sum(col("sl")).cast("double").as("sl"),
-        sum(col("nd")).cast("double").as("nd"))
+    val glob = bm25Consts(pin.table("fts2_glob"))
     post.join(broadcast(dfx), "tok")
       .crossJoin(broadcast(glob))
       .withColumn("part", expr(bm25Part))
@@ -874,12 +824,14 @@ object Engine3 {
     // ---- q161: persisted full-text index — build once, search many -------
     // q71 computes BM25 inline, scanning the corpus per query; the
     // production shape tokenizes ONCE into catalog tables and serves
-    // every search from them:
-    //  - fts_post (tok, doc_id, tf, dl) — per-(doc, term) frequencies +
-    //    doc length, written range-clustered by token
+    // every search from them — the maintained index, seeded whole into
+    // [[ftsServe]] (the donor-memoized seed every index gate shares):
+    //  - fts2_post (tok, doc_id, tf, dl, rev) — per-(doc, term)
+    //    frequencies + doc length, written range-clustered by token
     //    (repartitionByRange + sortWithinPartitions), so each file's
     //    registered [min, max] on `tok` is narrow and DISJOINT;
-    //  - fts_glob (nd, sl) — the two corpus constants, one row.
+    //  - fts2_glob (nd, sl) — the additive corpus-constants log (one
+    //    seed row here; summed at serve time like every maintained serve).
     // The search pushes `tok IN (...)` into the scan: commit-time range
     // registry entries disprove the IN-list per file, so only the files
     // whose token range can hold a query term are ever opened
@@ -890,15 +842,11 @@ object Engine3 {
     // from the raw corpus (the build is deterministic).
     QueryDef(
       "q161_fts_index_serve",
-      (s, dir) => {
-        val ns = ensureCatalog(s, dir)
-        // tok IN (...) → parquet pushdown + per-file range disproof over
-        // the token-clustered files (inside bm25Scores)
-        bm25Scores(s, ns, Seq("join", "scan", "hash"))
-          .select(col("doc_id"), col("score").cast("long").as("score_micro"))
-          .orderBy(desc("score_micro"), col("doc_id"))
-          .limit(20)
-      },
+      // tok IN (...) → parquet pushdown + per-file range disproof over
+      // the token-clustered files (inside fts2Bm25)
+      (s, dir) => fts2Bm25(s, ftsServe, Seq("join", "scan", "hash"))
+        .orderBy(desc("score_micro"), col("doc_id"))
+        .limit(20),
       // the index build is deterministic, so serving from it ≡ q71's
       // inline computation — the oracle replays from the raw corpus
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS sp FROM documents),
@@ -919,8 +867,7 @@ object Engine3 {
       // build-once fixture: tokenize the corpus into the postings table,
       // RANGE-CLUSTERED by token so the serve's IN-list file-prunes; the
       // bench reports index BUILD (setup) and SERVE (query) separately
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q162: PHRASE search over the positional index -------------------
     // Bag-of-words postings cannot answer "hash join" AS A PHRASE; the
@@ -934,8 +881,7 @@ object Engine3 {
     QueryDef(
       "q162_fts_phrase",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
-        val pos = s.table(s"$ns.fts_pos")
+        val pos = s.table(s"$ftsServe.fts2_pos")
         val first = pos.where(col("tok") === "hash")
           .select(col("doc_id"), col("pos"))
         val next = pos.where(col("tok") === "join")
@@ -953,9 +899,10 @@ object Engine3 {
         FROM p p1 JOIN p p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1
         WHERE p1.tok = 'hash' AND p2.tok = 'join'
         GROUP BY p1.doc_id ORDER BY n_hits DESC, p1.doc_id"""),
-      // fixture: the positional postings table, token-range-clustered like
-      // q161's — one build serves every phrase/proximity query after it
-      setup = Some((s, dir) => buildPosIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: q161's seed, whose positional table (fts2_pos) is
+      // token-range-clustered like its postings — one build serves every
+      // phrase/proximity query after it
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q163: COPY INTO — exactly-once external-file ingest --------------
     // A landing zone (an upstream job's drop directory) is loaded into a
@@ -1039,14 +986,13 @@ object Engine3 {
     QueryDef(
       "q164_hybrid_rrf",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
         val topk = udaf(graft.functions.TopKAgg(20),
           org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.functions.TopKIn]())
         // sparse: BM25 top-20 from the persisted index (scores are exact
-        // integer micros in double — TopKAgg's (score DESC, id ASC) is
-        // the oracle's ROW_NUMBER tie-break)
-        val sr = bm25Scores(s, ns, Seq("join", "scan", "hash"))
-          .agg(topk(col("score"), col("doc_id")).as("top"))
+        // integer micros — TopKAgg's (score DESC, id ASC) is the
+        // oracle's ROW_NUMBER tie-break)
+        val sr = fts2Bm25(s, ftsServe, Seq("join", "scan", "hash"))
+          .agg(topk(col("score_micro").cast("double"), col("doc_id")).as("top"))
           .select(posexplode(col("top")))
           .select((col("pos") + 1).cast("long").as("rank_s"),
             col("col.id").as("doc_id"))
@@ -1111,9 +1057,8 @@ object Engine3 {
           CAST(round((coalesce(1.0 / (60 + rank_s), 0.0) +
                       coalesce(1.0 / (60 + rank_d), 0.0)) * 1e9) AS BIGINT) AS rrf_nano
         FROM f ORDER BY rrf_nano DESC, doc_id"""),
-      // fixture: the same q161 index build — hybrid serving reuses it
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed — hybrid serving reuses it
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q165: CHECKSUM TABLE — replica verification without data motion --
     // "Is the replica byte-for-byte the source?" answered by comparing ONE
@@ -1600,19 +1545,7 @@ object Engine3 {
       // fixture: its OWN namespace (gates stay independent of q170),
       // row-keyed ingest table (row-level DELETE/UPDATE need it), the
       // WHOLE corpus seeded and indexed through the shared fold
-      setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
-        val ns2 = "gcat.fts3"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.fts3")
-        fts2Create(s, ns2, withRowKey = true)
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        fts2SeedFold(s, ns2, dir, v1)
-        ()
-      })),
+      setup = Some((s, dir) => fts2SeedCorpus(s, "gcat.fts3", dir))),
 
     // ---- q173: index tombstone COMPACTION ----------------------------------
     // q171/q172's mutation folds deliberately never touch the existing
@@ -1687,16 +1620,8 @@ object Engine3 {
       // fold, then a takedown + re-crawl interval folded as mutations —
       // the measured run starts with real compaction debt
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         val ns2 = "gcat.fts5"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.fts5")
-        fts2Create(s, ns2, withRowKey = true)
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        fts2SeedFold(s, ns2, dir, v1)
+        val v1 = fts2SeedCorpus(s, ns2, dir)
         s.sql(s"DELETE FROM $ns2.fts2_src WHERE doc_id % 11 = 3")
         s.sql(
           s"""UPDATE $ns2.fts2_src SET text = concat(text, ' refreshed')
@@ -1853,7 +1778,6 @@ object Engine3 {
     QueryDef(
       "q176_fts_batch_serve",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
         import s.implicits._
         val queries = Seq(
           0L -> Seq("join", "scan", "hash"),
@@ -1863,12 +1787,10 @@ object Engine3 {
           .toDF("qid", "tok")
         val allTerms = queries.flatMap(_._2).distinct
         // ONE IN-pruned pass over the postings; df shared across queries
-        val post = s.table(s"$ns.fts_post").where(col("tok").isin(allTerms: _*))
+        val post = s.table(s"$ftsServe.fts2_post").where(col("tok").isin(allTerms: _*))
         val dfx = post.groupBy(col("tok"))
           .agg(count(lit(1)).cast("double").as("df"))
-        val glob = s.table(s"$ns.fts_glob")
-          .select(col("sl").cast("double").as("sl"),
-            col("nd").cast("double").as("nd"))
+        val glob = bm25Consts(s.table(s"$ftsServe.fts2_glob"))
         val topk = udaf(graft.functions.TopKAgg(5),
           org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.functions.TopKIn]())
         post.join(broadcast(dfx), "tok")
@@ -1911,9 +1833,8 @@ object Engine3 {
                   ORDER BY score DESC, doc_id) AS rank
               FROM scored)
         WHERE rank <= 5 ORDER BY qid, rank"""),
-      // fixture: the same q161 index build — batched serving reuses it
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed — batched serving reuses it
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q177: PROXIMITY search over the positional index ------------------
     // The SpanNear operator: "hash NEAR/3 join" — the two terms within 3
@@ -1929,8 +1850,7 @@ object Engine3 {
     QueryDef(
       "q177_fts_proximity",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
-        val pos = s.table(s"$ns.fts_pos")
+        val pos = s.table(s"$ftsServe.fts2_pos")
         val a = pos.where(col("tok") === "hash")
           .select(col("doc_id"), col("pos").as("p1"))
         val b = pos.where(col("tok") === "join")
@@ -1952,8 +1872,8 @@ object Engine3 {
           AND abs(p1.pos - p2.pos) <= 3
         WHERE p1.tok = 'hash' AND p2.tok = 'join'
         GROUP BY p1.doc_id ORDER BY n_pairs DESC, p1.doc_id"""),
-      // fixture: the same q162 positional index build
-      setup = Some((s, dir) => buildPosIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed (its positional table)
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q178: BOOLEAN retrieval — AND / NOT over the postings index -------
     // The query-language staple the ranked serves don't cover: docs that
@@ -1971,18 +1891,15 @@ object Engine3 {
     QueryDef(
       "q178_fts_boolean",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
         val required = Seq("scan", "filter")
         val excluded = "hash"
-        val post = s.table(s"$ns.fts_post")
+        val post = s.table(s"$ftsServe.fts2_post")
           .where(col("tok").isin(required :+ excluded: _*))
         val reqPost = post.where(col("tok").isin(required: _*))
         val negDocs = post.where(col("tok") === excluded).select("doc_id")
         val dfx = reqPost.groupBy(col("tok"))
           .agg(count(lit(1)).cast("double").as("df"))
-        val glob = s.table(s"$ns.fts_glob")
-          .select(col("sl").cast("double").as("sl"),
-            col("nd").cast("double").as("nd"))
+        val glob = bm25Consts(s.table(s"$ftsServe.fts2_glob"))
         reqPost.join(broadcast(dfx), "tok")
           .crossJoin(broadcast(glob))
           .withColumn("part", expr(bm25Part))
@@ -2012,9 +1929,8 @@ object Engine3 {
         SELECT doc_id, score_micro FROM scored
         WHERE nt = 2 AND doc_id NOT IN (SELECT doc_id FROM neg)
         ORDER BY score_micro DESC, doc_id"""),
-      // fixture: the same q161 index build
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q180: PREFIX search — `sca*` as a range over the clustered index --
     // Wildcard-prefix term match, the autocomplete/stemming primitive.
@@ -2032,24 +1948,21 @@ object Engine3 {
     // adjacent files.
     QueryDef(
       "q180_fts_prefix",
-      (s, dir) => {
-        val ns = ensureCatalog(s, dir)
-        s.table(s"$ns.fts_post")
+      (s, dir) =>
+        s.table(s"$ftsServe.fts2_post")
           .where(col("tok").startsWith("sca"))
           .groupBy(col("tok"))
           .agg(count(lit(1)).cast("long").as("n_docs"),
             sum(col("tf")).cast("long").as("n_occurrences"))
-          .orderBy(desc("n_docs"), col("tok"))
-      },
+          .orderBy(desc("n_docs"), col("tok")),
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS sp FROM documents),
         t AS (SELECT doc_id, unnest(sp) AS tok FROM d)
         SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
                CAST(COUNT(*) AS BIGINT) AS n_occurrences
         FROM t WHERE tok LIKE 'sca%'
         GROUP BY tok ORDER BY n_docs DESC, tok"""),
-      // fixture: the same q161 index build
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q181: SNIPPET extraction — the ±2-token window around the hit ----
     // Search UIs and RAG prompts don't show postings, they show context.
@@ -2064,11 +1977,10 @@ object Engine3 {
     QueryDef(
       "q181_fts_snippets",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
-        val hits = s.table(s"$ns.fts_pos")
+        val hits = s.table(s"$ftsServe.fts2_pos")
           .where(col("tok") === "stream")
           .groupBy(col("doc_id"))
-          // fts_pos positions are 0-based; i is the 1-based array index
+          // fts2_pos positions are 0-based; i is the 1-based array index
           .agg((min(col("pos")) + 1).as("i"))
         val docs = s.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), split(col("text"), " ").as("sp"))
@@ -2087,8 +1999,8 @@ object Engine3 {
           array_to_string(sp[CAST(greatest(i - 2, 1) AS BIGINT):
                              CAST(least(i + 2, len(sp)) AS BIGINT)], ' ') AS snippet
         FROM h ORDER BY doc_id"""),
-      // fixture: the same q162 positional index build
-      setup = Some((s, dir) => buildPosIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed (its positional table)
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q182: FUZZY term lookup — SymSpell deletion neighborhoods ---------
     // "Did you mean": index terms within edit distance 1 of a misspelled
@@ -2108,11 +2020,10 @@ object Engine3 {
     QueryDef(
       "q182_fts_fuzzy_term",
       (s, dir) => {
-        val ns = ensureCatalog(s, dir)
         val query = "sow"
         val qVariants = (query +: query.indices.map(i =>
           query.substring(0, i) + query.substring(i + 1))).distinct
-        val dict = s.table(s"$ns.fts_post")
+        val dict = s.table(s"$ftsServe.fts2_post")
           .groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
         val variants = dict.select(col("tok"), col("df"), explode(expr(
           """array_union(array(tok), transform(sequence(1, length(tok)),
@@ -2134,9 +2045,8 @@ object Engine3 {
         SELECT tok, CAST(levenshtein(tok, 'sow') AS BIGINT) AS dist, df
         FROM dict WHERE levenshtein(tok, 'sow') <= 1
         ORDER BY dist, df DESC, tok"""),
-      // fixture: the same q161 index build
-      setup = Some((s, dir) =>
-        buildFtsIndex(s, dir, ensureCatalog(s, dir)))),
+      // fixture: the same q161 index seed
+      setup = Some((s, dir) => fts2SeedCorpus(s, ftsServe, dir))),
 
     // ---- q183: MAINTAINED fuzzy suggestions — the variant dict as an index -
     // q182's deletion-variant table, upgraded from derived-inline to a
@@ -2214,31 +2124,22 @@ object Engine3 {
       // identity), the WHOLE corpus seeded through the shared fold +
       // the dict's seed fold
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         val ns2 = "gcat.fts7"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.fts7")
-        fts2Create(s, ns2, withRowKey = true)
+        val v1 = fts2SeedCorpus(s, ns2, dir)
         s.sql(s"CREATE TABLE IF NOT EXISTS $ns2.dict_var (variant STRING, tok STRING)")
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        val seed = s.read.option("since-version", 0L)
-          .option("snapshot-version", v1).table(s"$ns2.fts2_src")
-          .select(col("doc_id"), col("text"))
-        // dict before index, as in the run: a crash between the two
-        // leaves superset-dict + un-advanced watermark (recoverable),
-        // never indexed-terms-missing-from-dict (permanent)
-        dictFold(s, ns2, seed)
-        fts2SeedFold(s, ns2, dir, v1)
+        // the dict's seed fold follows the (memoized) index seed: a crash
+        // between the two fails the setup, and a re-run recreates the
+        // index tables and re-folds the dict (it only ever adds terms)
+        dictFold(s, ns2, s.read.option("snapshot-version", v1)
+          .table(s"$ns2.fts2_src").select(col("doc_id"), col("text")))
         ()
       })),
 
     // ---- q184: HYBRID retrieval over the MAINTAINED indexes ----------------
-    // q164's RRF fusion, upgraded from static build-once indexes to the
-    // production state: a corpus that has taken a takedown (id % 7 = 3
-    // deleted from BOTH the docs and their embeddings) and a re-crawl
+    // q164's RRF fusion, upgraded from a never-mutated seed (and a
+    // brute-force dense probe) to the production state: a corpus that
+    // has taken a takedown (id % 7 = 3 deleted from BOTH the docs and
+    // their embeddings) and a re-crawl
     // (id % 7 = 5: new text + new embedding), with BOTH retrieval
     // indexes kept current by their change-feed folds (q171's FTS
     // discipline, q172's ANN discipline) — never rebuilt. The serve
@@ -2351,7 +2252,6 @@ object Engine3 {
       // whole and mutation-folded through the SHARED q171/q172 routines
       // (mirrored mutations: same takedown slice, same re-crawl slice)
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         // ANN side: seed + the q172 mutation fold (DELETE % 7 = 3,
         // re-embed % 7 = 5) — ann3Seed drops/recreates, so re-runs are
         // fresh
@@ -2359,14 +2259,7 @@ object Engine3 {
         Engine2.ann3MutateAndFold(s, "gcat.hann")
         // FTS side: seed fold, then the MIRRORED mutations + feed fold
         val ns2 = "gcat.hfts"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.hfts")
-        fts2Create(s, ns2, withRowKey = true)
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        fts2SeedFold(s, ns2, dir, v1)
+        val v1 = fts2SeedCorpus(s, ns2, dir)
         s.sql(s"DELETE FROM $ns2.fts2_src WHERE doc_id % 7 = 3")
         s.sql(
           s"""UPDATE $ns2.fts2_src
@@ -2453,16 +2346,8 @@ object Engine3 {
       // fixture: seed + a churn interval folded under the OLD analysis —
       // the measured run migrates a lived-in index, not a fresh one
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         val ns2 = "gcat.fts9"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.fts9")
-        fts2Create(s, ns2, withRowKey = true)
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        fts2SeedFold(s, ns2, dir, v1)
+        val v1 = fts2SeedCorpus(s, ns2, dir)
         s.sql(s"DELETE FROM $ns2.fts2_src WHERE doc_id % 9 = 4")
         s.sql(
           s"""UPDATE $ns2.fts2_src SET text = concat(text, ' recrawled')
@@ -2689,20 +2574,12 @@ object Engine3 {
       // fixture: both indexes seeded WHOLE through the shared folds —
       // the measured run owns the churn and the concurrent drains
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         Engine2.ann3Seed(s, "gcat.dann", dir)
         val ns2 = "gcat.dfts"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.dfts")
-        fts2Create(s, ns2, withRowKey = true)
+        fts2SeedCorpus(s, ns2, dir)
         s.sql(s"DROP TABLE IF EXISTS $ns2.maint_log")
         s.sql(s"CREATE TABLE $ns2.maint_log " +
           "(v_from BIGINT, v_to BIGINT, route STRING, won BOOLEAN)")
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        fts2SeedFold(s, ns2, dir, v1)
         ()
       })),
 
@@ -2800,25 +2677,14 @@ object Engine3 {
                CAST(0 AS BIGINT) AS n_tomb, dr.dict_rows
         FROM dict CROSS JOIN dr WHERE levenshtein(tok, 'sow') <= 1
         ORDER BY dist, df DESC, tok"""),
-      // fixture: corpus + dict seeded through the SHARED folds in the
-      // crash-safe order (dict first); the measured run owns the churn
-      // and the maintainer drain
+      // fixture: corpus + dict seeded through the SHARED folds (q183's
+      // setup); the measured run owns the churn and the maintainer drain
       setup = Some((s, dir) => {
-        ensureCatalog(s, dir)
         val ns2 = "gcat.fts10"
-        s.sql("CREATE NAMESPACE IF NOT EXISTS gcat.fts10")
-        fts2Create(s, ns2, withRowKey = true)
+        val v1 = fts2SeedCorpus(s, ns2, dir)
         s.sql(s"CREATE TABLE IF NOT EXISTS $ns2.dict_var (variant STRING, tok STRING)")
-        s.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").cast("string").as("row_key"),
-            col("doc_id"), col("text"))
-          .writeTo(s"$ns2.fts2_src").append()
-        val v1 = fts2SrcVersion(s, ns2)
-        val seed = s.read.option("since-version", 0L)
-          .option("snapshot-version", v1).table(s"$ns2.fts2_src")
-          .select(col("doc_id"), col("text"))
-        dictFold(s, ns2, seed)
-        fts2SeedFold(s, ns2, dir, v1)
+        dictFold(s, ns2, s.read.option("snapshot-version", v1)
+          .table(s"$ns2.fts2_src").select(col("doc_id"), col("text")))
         ()
       }))
   )
@@ -2875,6 +2741,12 @@ object Engine3 {
       dd.getFileSystem(new org.apache.hadoop.conf.Configuration()), dd)
       .getOrElse(0L)
   }
+
+  /** Whether every named table of `ns` still stands at its live
+    * version — a donor's re-seed check ([[fts2SeedCorpus]]). */
+  private[graft] def standsAt(s: SparkSession, ns: String,
+      versions: (String, Long)*): Boolean =
+    versions.forall { case (t, v) => tableVersion(s, ns, t) == v }
 
   /** LIVE registry head of `ns.dict_var` (0 when never written) — the
     * version the dict-consistency preconditions compare ([[dictFold]]'s

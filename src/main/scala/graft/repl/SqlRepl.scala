@@ -130,21 +130,13 @@ object SqlRepl {
   }
 
   def main(args: Array[String]): Unit = {
-    graft.sources.FastLocalFileSystem.install() // before any file:// use
     val warehouse = args.headOption
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_warehouse")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-sql")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", warehouse)
-      .config("spark.sql.defaultCatalog", "graft")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.types.RegionSpanUDT.register()
+    val spark = graft.GraftSession.create(
+      "spark.app.name" -> "graft-sql",
+      "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
+      "spark.sql.catalog.graft.warehouse" -> warehouse,
+      "spark.sql.defaultCatalog" -> "graft")
 
     println(s"graft SQL console (warehouse: $warehouse); statements end with ';', EXIT; quits.")
     val history = defaultHistory()

@@ -73,9 +73,9 @@ object FastLocalFileSystem {
     * BEFORE the first local-filesystem access in the JVM: Hadoop's
     * FileSystem cache keys on (scheme, authority) only, so a
     * RawLocalFileSystem created earlier keeps serving `file://` for the
-    * process regardless of later configuration. The graft driver mains
-    * (Bench/Verify/PlanDump/SetupProbe/SqlRepl) call this before building
-    * their SparkSession; embedded users opt in the same way. */
+    * process regardless of later configuration. [[graft.GraftSession]]
+    * calls this before building the driver mains' (Bench/Verify/PlanDump/
+    * SqlRepl) SparkSession; embedded users opt in the same way. */
   def install(): Unit =
     org.apache.hadoop.conf.Configuration.addDefaultResource("graft-fs-site.xml")
 }

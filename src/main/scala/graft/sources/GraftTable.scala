@@ -3196,7 +3196,7 @@ final class GraftWriteBuilder(
   // land in few tasks instead of every task, so a 1000-task INSERT writes
   // ~#partitions files, not #tasks x #partitions small files — the
   // write-side half of the small-file story (compaction is the repair
-  // half). Opt out per table with write.distribute=false.
+  // half).
   override def build(): Write = {
     // bucket clustering resolves through the catalog's FunctionCatalog
     // (tasks align to bucket ids — one file per populated bucket per
@@ -3250,8 +3250,7 @@ final class GraftWriteBuilder(
         org.apache.spark.sql.connector.expressions.Expressions.column(c),
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
       .toArray
-    val distribute = props.getOrElse("write.distribute", "true").toBoolean
-    if ((clusterOn.nonEmpty || sortOrders.nonEmpty) && distribute)
+    if (clusterOn.nonEmpty || sortOrders.nonEmpty)
       new GraftWrite with RequiresDistributionAndOrdering {
         override def requiredDistribution():
             org.apache.spark.sql.connector.distributions.Distribution =

@@ -6,11 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** The persisted full-text index's serve-path contract (q161/q162): a
-  * token-RANGE-CLUSTERED postings table file-prunes keyword lookups via
-  * the commit-time range registry, and the positional phrase join is
-  * exact — including overlapping self-adjacent occurrences. Clustering
-  * is an optimization only: an unclustered copy answers identically.
+/** The full-text index's contract. Serve path (q161/q162 over the
+  * maintained fts2 tables): a token-RANGE-CLUSTERED postings table
+  * file-prunes keyword lookups via the commit-time range registry, and
+  * the positional phrase join is exact — including overlapping
+  * self-adjacent occurrences. Clustering is an optimization only: an
+  * unclustered copy answers identically. Maintenance (q170 onward):
+  * folds, mutation folds, compaction and the donor-memoized corpus seed
+  * all serve as a from-scratch rebuild would.
   */
 class FtsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -949,5 +952,93 @@ class FtsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // quiet retry commits (and re-applies the serve's own drop rule)
     assert(graft.queries.Engine3.dictCompact(spark, ns),
       "the next trigger must compact cleanly")
+  }
+
+  test("donor memo: a seed copy keeps serving the seed while its donor is " +
+      "mutated; re-seeding the donor is a no-op until it moves") {
+    // every index gate seeds through the donor memo (fts2SeedCorpus,
+    // ann3SeedFrom with a cacheKey): the first namespace folds inline and
+    // becomes the donor, later ones copy its seed rows pinned at the
+    // seed-time versions. A copy must equal a rebuild from the unmutated
+    // corpus even after the donor takes a mutation fold, and the donor
+    // itself must have moved. A fresh session: the gate seeds register
+    // the gcat catalog under a warehouse of their own.
+    val spark = this.spark.newSession()
+    import spark.implicits._
+    def srcVersion(ns: String): Long = graft.queries.Engine3.fts2SrcVersion(spark, ns)
+    val dir = java.nio.file.Files.createTempDirectory("graft-donor").toString
+    (0L until 40L).map(i => (i, s"tok${i % 7} hash join tok${i % 5} common"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val E3 = graft.queries.Engine3
+    val E2 = graft.queries.Engine2
+    val (donor, copy, rebuild) = ("gcat.dmd", "gcat.dmc", "gcat.dmr")
+    E3.fts2SeedCorpus(spark, donor, dir)
+    E3.fts2SeedCorpus(spark, copy, dir)
+    // re-seeding the untouched donor commits nothing
+    val donorPost = E3.tableVersion(spark, donor, "fts2_post")
+    E3.fts2SeedCorpus(spark, donor, dir)
+    assert(E3.tableVersion(spark, donor, "fts2_post") == donorPost)
+    // the rebuild folds the corpus directly, outside the memo
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $rebuild")
+    E3.fts2Create(spark, rebuild)
+    spark.read.parquet(s"$dir/documents.parquet").writeTo(s"$rebuild.fts2_src").append()
+    E3.fts2Fold(spark, rebuild, spark.table(s"$rebuild.fts2_src"), srcVersion(rebuild))
+    // the mutation fold on the donor: a takedown and a re-crawl
+    val v1 = srcVersion(donor)
+    spark.sql(s"DELETE FROM $donor.fts2_src WHERE doc_id % 3 = 0")
+    spark.sql(s"UPDATE $donor.fts2_src SET text = 'hash join hash join' WHERE doc_id % 3 = 1")
+    val v2 = srcVersion(donor)
+    val tbl = spark.sessionState.catalogManager.catalog("gcat")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array("dmd"), "fts2_src"))
+      .asInstanceOf[graft.sources.GraftTable]
+    E3.fts2FoldFeed(spark, donor, s"$donor.fts2_src",
+      graft.sources.Snapshots.changes(spark, tbl, since = v1, end = Some(v2)), v1, v2)
+    def bm25(n: String): Seq[(Long, Long)] =
+      E3.fts2Bm25(spark, n, Seq("hash", "tok3", "common")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def phrase(n: String): Long = {
+      val tomb = E3.fts2TombMaxOpt(spark, n)
+      val pos = spark.table(s"$n.fts2_pos")
+      E3.fts2Surviving(pos.where(col("tok") === "hash"), tomb)
+        .select(col("doc_id"), col("pos"))
+        .join(E3.fts2Surviving(pos.where(col("tok") === "join"), tomb)
+          .select(col("doc_id"), (col("pos") - 1).as("pos")), Seq("doc_id", "pos"))
+        .count()
+    }
+    assert(bm25(copy) == bm25(rebuild), "the copy must serve the seed")
+    assert(phrase(copy) == phrase(rebuild))
+    assert(bm25(donor) != bm25(rebuild), "the donor's serve must have moved")
+    assert(phrase(donor) != phrase(rebuild))
+    // re-seeding the MOVED donor folds inline again (its old rows are gone)
+    E3.fts2SeedCorpus(spark, donor, dir)
+    assert(bm25(donor) == bm25(rebuild) && phrase(donor) == phrase(rebuild))
+
+    // the ANN side: 24 deterministic 64-dim vectors, flattened
+    def flat(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+      ids.flatMap(i => (0 until 64).map(p =>
+          (i, p, ((i * 31 + p * 7) % 13 - 6).toDouble / 7)))
+        .toDF("vec_id", "pos", "v")
+    val key = Some(s"$dir|ann")
+    E2.ann3SeedFrom(spark, "gcat.dad", flat(0L until 24L), key)
+    E2.ann3SeedFrom(spark, "gcat.dac", flat(0L until 24L), key)
+    E2.ann3SeedFrom(spark, "gcat.dar", flat(0L until 24L))
+    E2.ann3MutateAndFold(spark, "gcat.dad")
+    val queries = E2.annRegroup(flat(0L until 24L))
+    def ann(n: String): Seq[String] = {
+      val tomb = E2.ann3TombMaxOpt(spark, n)
+      val live = E2.ann3Surviving(spark.table(s"$n.ann3_post"), tomb)
+        .agg(count(lit(1)).cast("long").as("n_live"))
+      E2.annServe(queries, E2.regroupCent(spark.table(s"$n.ann3_cent")),
+        E2.regroupBook(spark.table(s"$n.ann3_book")),
+        probed => E2.ann3Surviving(spark.table(s"$n.ann3_post")
+          .where(col("list_id").isin(probed: _*)), tomb),
+        proof = Some(live)).collect().map(_.toString).toSeq
+    }
+    assert(ann("gcat.dac") == ann("gcat.dar"), "the ANN copy must serve the seed")
+    assert(ann("gcat.dad") != ann("gcat.dar"), "the ANN donor's serve must have moved")
+    scala.reflect.io.Path(spark.conf.get("spark.sql.catalog.gcat.warehouse"))
+      .deleteRecursively()
+    scala.reflect.io.Path(dir).deleteRecursively()
   }
 }
