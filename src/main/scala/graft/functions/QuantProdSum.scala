@@ -144,55 +144,6 @@ case class IntDotSum(left: Expression, right: Expression)
 
 object QuantProdSum {
 
-  private def arity3(name: String)(
-      builder: (Expression, Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = { children =>
-    require(children.length == 3,
-      s"graft: $name requires exactly 3 arguments " +
-        s"(array, array, scale); got ${children.length}")
-    builder(children(0), children(1), children(2))
-  }
-  private def arity2(name: String)(
-      builder: (Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = { children =>
-    require(children.length == 2,
-      s"graft: $name requires exactly 2 arguments (array, array); " +
-        s"got ${children.length}")
-    builder(children(0), children(1))
-  }
-
-  /** The (identifier, info, builder) triples — ONE definition shared by
-    * [[GraftExtensions]] and [[register]], so arity validation and
-    * construction can never diverge between the two registration
-    * paths. */
-  private[functions] def registrations: Seq[(
-      org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("quant_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[QuantProdSum].getName, "quant_dot"),
-      arity3("quant_dot")(QuantProdSum(_, _, _))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("quant_dist2"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[QuantDiffSum].getName, "quant_dist2"),
-      arity3("quant_dist2")(QuantDiffSum(_, _, _))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("int_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[IntDotSum].getName, "int_dot"),
-      arity2("int_dot")(IntDotSum(_, _))))
-
-  /** Session-local registration for library code that builds SQL
-    * expression strings (KMeans, the vector queries): idempotent, so it
-    * works whether or not the session was built with `GraftExtensions`
-    * (which also injects these). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    registrations.foreach { case (fid, info, builder) =>
-      if (!reg.functionExists(fid)) reg.registerFunction(fid, info, builder)
-    }
-  }
-
   /** Round half away from zero on the exact binary value — see the class
     * doc for why this equals Spark's and DuckDB's round for |x| < 2^52.
     * The `d == f` branch corrects `floor(x+0.5)`'s double-rounding: the

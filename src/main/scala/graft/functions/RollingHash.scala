@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,37 +55,5 @@ object RollingHash {
     var i = 0
     while (i < bytes.length) { h = (h * 31L + (bytes(i) & 0xffL)) % Mod; i += 1 }
     h
-  }
-}
-
-/** Session extensions registering graft's native SQL functions; enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => RollingHash(children.head)))
-    // quantized / integer vector arithmetic — the vector pipeline's hot
-    // loops as compiled expressions; triples shared with
-    // QuantProdSum.register so arity checks can never diverge
-    QuantProdSum.registrations.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // View SQL bridge: CREATE/DROP/SHOW VIEWS on a graft catalog, plus
-    // expand-at-resolution substitution of stored view text (Spark 4.1
-    // has no built-in DSv2 view wiring; see GraftViewBridge).
-    ext.injectParser((session, parser) =>
-      new graft.sources.GraftViewSqlParser(session, parser))
-    ext.injectResolutionRule(session =>
-      graft.sources.GraftViewSubstitution(session))
-    // Streaming reads must not resolve _file/_version: Spark's DSv2
-    // metadata-column wiring is batch-only, and an unresolved-at-scan
-    // metadata column dies mid-batch with an opaque arity error.
-    ext.injectResolutionRule(session =>
-      graft.sources.GraftStreamingMetaGuard(session))
-    // Materialized-view rewrite: aggregates over a base table re-plan
-    // against a FRESH materialization (see MaterializedViews).
-    ext.injectOptimizerRule(session =>
-      graft.sources.GraftMvRewrite(session))
   }
 }

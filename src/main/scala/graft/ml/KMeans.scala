@@ -61,7 +61,7 @@ object KMeans {
     * scale — runs as one compiled loop instead of an interpreted
     * closure + BigDecimal round per element. */
   private def withCluster(emb: DataFrame, m: Model): DataFrame = {
-    graft.functions.QuantProdSum.register(emb.sparkSession)
+    graft.functions.NativeFunctions.register(emb.sparkSession)
     emb.withColumn("cents", modelLit(m))
       .withColumn("cluster", expr(
         """aggregate(
@@ -347,7 +347,7 @@ object KMeans {
   /** Mean cosine of each vector to its assigned centroid — the objective
     * (higher is better); used to check convergence. */
   def objective(emb: DataFrame, centroids: DataFrame): Double = {
-    graft.functions.QuantProdSum.register(emb.sparkSession)
+    graft.functions.NativeFunctions.register(emb.sparkSession)
     assign(emb, centroids)
       .join(centroids.select(col("cluster"), col("c")), "cluster")
       .withColumn("dot",

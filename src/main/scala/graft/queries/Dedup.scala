@@ -168,26 +168,26 @@ object Dedup {
     // only hashes starting with hex '0' (1/16): selection depends on the
     // window's CONTENT, not its position, so two documents sharing a long
     // span still select the same windows (P ≈ 1-(15/16)^(L-49) — ~1 for
-    // spans over ~150 chars) while the distinct+join input shrinks 16× —
-    // the un-sampled variant benched 13 s at sf0.1, this lands ~3 s.
+    // spans over ~150 chars) while the distinct+join input shrinks 16×.
+    // Hashing is the native `window_md5` kernel (one compiled call per
+    // document; the interpreted transform/md5 lambda it replaces was most
+    // of q51's time at sf0.1), spread over shuffle-partitions tasks
+    // by a round-robin repartition: the corpus is one small parquet row
+    // group, so without it the whole hashing stage is one task.
     // Window join is df-capped like the shingle join (boilerplate spans
     // would otherwise create skew at corpus scale).
     QueryDef(
       "q51_substring_dups",
       (s, dir) => {
+        graft.functions.NativeFunctions.register(s)
         val t = Tables(s, dir)
-        // sample (1/16 of windows, content-defined) and dedup ROW-LOCALLY:
-        // filter + array_distinct inside the transform replace a corpus-wide
-        // post-explode DISTINCT shuffle — the rows that emerge are already
-        // distinct (doc_id, h) pairs
+        // sample (1/16 of windows, content-defined) and dedup ROW-LOCALLY
+        // inside the kernel: the rows that emerge are already distinct
+        // (doc_id, h) pairs, no corpus-wide post-explode DISTINCT shuffle
         val win = t.documents
           .filter(length(col("text")) >= 50)
-          .select(col("doc_id"),
-            explode(expr(
-              "array_distinct(filter(" +
-                "transform(sequence(1, length(text) - 49), i -> md5(cast(substring(text, i, 50) as binary)))," +
-                " h -> substring(h, 1, 1) = '0'))"))
-              .as("h"))
+          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+          .select(col("doc_id"), explode(expr("window_md5(text, 50, '0')")).as("h"))
         // df cap as a window over the window-hash partition (not an
         // aggregate joined back): the pair self-join below reuses the same
         // exchange on both sides

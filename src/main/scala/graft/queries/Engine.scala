@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{col, lit}
 object Engine {
 
   private[queries] def ensureCatalog(s: SparkSession, dir: String): String = {
-    graft.functions.QuantProdSum.register(s) // quant_dot in expr strings
+    graft.functions.NativeFunctions.register(s) // quant_dot in expr strings
     val id = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     s.conf.set("spark.sql.catalog.gcat", "graft.sources.GraftCatalog")

@@ -76,7 +76,7 @@ object Engine2 {
     * unconditionally, so a subvector whose distances are all NaN gets
     * the lowest code, as the sort gave it. */
   private[graft] def annEncode(src: DataFrame, cent: DataFrame, book: DataFrame): DataFrame = {
-    graft.functions.QuantProdSum.register(src.sparkSession)
+    graft.functions.NativeFunctions.register(src.sparkSession)
     // cn2 computed IN Spark (same quant_dot the joins used) at collect
     // time, so the literal carries bit-identical norms
     val centRows = cent

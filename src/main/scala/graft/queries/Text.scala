@@ -142,10 +142,11 @@ object Text {
 
     // ---- q32: rolling-hash fingerprints via the native codegen
     //           expression (graft.functions.RollingHash, registered as
-    //           rolling_hash by GraftExtensions) -------------------------
+    //           rolling_hash by NativeFunctions) -------------------------
     QueryDef(
       "q32_rolling_fingerprint",
       (s, dir) => {
+        graft.functions.NativeFunctions.register(s)
         val t = Tables(s, dir)
         t.documents.createOrReplaceTempView("graft_docs_rh")
         s.sql("""SELECT doc_id, rolling_hash(text) AS fp

@@ -27,7 +27,7 @@ object Vectors {
     val bucketExpr = (0 to 7)
       .map(j => s"(case when e[$j] > 0 then ${1 << j} else 0 end)")
       .mkString(" + ")
-    graft.functions.QuantProdSum.register(t.embeddings.sparkSession)
+    graft.functions.NativeFunctions.register(t.embeddings.sparkSession)
     t.embeddings.select(
       col("vec_id"),
       col("embedding").cast("array<double>").as("e"))

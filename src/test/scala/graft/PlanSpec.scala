@@ -80,6 +80,35 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("zip_with"), "interpreted HOF survived in the ANN path")
   }
 
+  test("q51: window hashing is the native window_md5 kernel on shuffle-partitions tasks") {
+    val df = SparkEntry.queries("q51_substring_dups")(spark, dir)
+    // per finished task, the ids of the accumulators it reported: a task
+    // ran the Generate iff it reported that node's SQL metric
+    val reported = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        reported.add(e.taskInfo.accumulables.map(_.id).toSet)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try df.collect() finally spark.sparkContext.removeSparkListener(listener)
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("window_md5"), plan.toString.take(3000))
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val gens = H.collect(plan) { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(gens.length == 1, gens)
+    val gen = gens.head
+    assert(gen.generator.toString.contains("window_md5"), gen)
+    assert(!gen.toString.contains("lambdafunction") && !gen.toString.contains("transform"),
+      s"interpreted lambda survived in q51's Generate: $gen")
+    val acc = gen.metrics("numOutputRows").id
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def tasks = reported.asScala.count(_.contains(acc))
+    // task-end events reach the listener asynchronously
+    val deadline = System.nanoTime() + 10000000000L
+    while (tasks < partitions && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(tasks == partitions, s"the hashing stage ran $tasks tasks")
+  }
+
   test("graft source: partitioned table prunes directories statically") {
     import java.nio.file.Files
     val wh = Files.createTempDirectory("graft_wh_part").toString
