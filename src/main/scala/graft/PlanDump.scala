@@ -4,9 +4,11 @@ package graft
   * (plans/<round>/<qNN>_{before,after}.txt). Usage:
   * `PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>` — runs each query's
   * declared setup first (plans of index serves depend on the fixture),
-  * then renders the plan of the query's returned DataFrame without
-  * executing it (queries whose run() itself drives actions — streaming
-  * drains, DDL — execute those as part of run(), as in Verify).
+  * then runs the query's returned DataFrame (`collect()`) and renders
+  * that same execution, so the dump is the plan that ran: AQE's final
+  * plan (`isFinalPlan=true`), with the exchanges it reused or removed at
+  * run time. Queries whose run() itself drives actions (streaming drains,
+  * DDL) execute those as part of run(), as in Verify.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,6 +23,7 @@ object PlanDump {
       spark.sparkContext.setJobDescription(s"plandump ${d.name}")
       d.setup.foreach(_(spark, dir))
       val df = d.run(spark, dir)
+      df.collect()
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

@@ -79,14 +79,6 @@ object KMeans {
     m.map { case (cl, c, _) => (cl, c.toSeq) }.toDF("cluster", "c")
   }
 
-  /** Caches `emb` for the iteration loop unless the caller already did;
-    * returns the unpersist handle (no-op when we didn't persist). */
-  private def ensureCached(emb: DataFrame): () => Unit =
-    if (emb.storageLevel == StorageLevel.NONE) {
-      emb.persist(StorageLevel.MEMORY_AND_DISK)
-      () => { emb.unpersist(); () }
-    } else () => ()
-
   // ---- primitive-RDD Lloyd core -------------------------------------------
   // The iteration loop used to run through the DataFrame API: per step one
   // plan carrying the whole model as a ~k×d-literal expression tree, the

@@ -321,9 +321,9 @@ object Engine2 {
     * tombstones — the serve plans NO survival join; broadcast under the
     * shared ceiling; plain join above it. */
   private[graft] def ann3TombMaxOpt(s: SparkSession, ns2: String): Option[DataFrame] =
-    ann3TombMaxOpt(s, ns2, Engine3.ServePin.live(s, ns2))
+    ann3TombMaxOpt(s, Engine3.ServePin.live(s, ns2))
 
-  private[graft] def ann3TombMaxOpt(s: SparkSession, ns2: String,
+  private[graft] def ann3TombMaxOpt(s: SparkSession,
       pin: Engine3.ServePin): Option[DataFrame] = {
     // sized AND read at the pin's cut (see Engine3.fts2TombMaxOpt)
     val (rows, bytes) = pin.stats("ann3_del")
@@ -469,7 +469,7 @@ object Engine2 {
     val pin = Engine3.ServePin.of(s, ns)
     val centT = regroupCent(pin.table("ann3_cent"))
     val bookT = regroupBook(pin.table("ann3_book"))
-    val tombMax = ann3TombMaxOpt(s, ns, pin)
+    val tombMax = ann3TombMaxOpt(s, pin)
     def counted(df: DataFrame, name: String) = df.agg(count(lit(1)).cast("long").as(name))
     val proof = proofs.map {
       case "n_live" => counted(ann3Surviving(pin.table("ann3_post"), tombMax), "n_live")

@@ -659,9 +659,9 @@ object Engine3 {
     * unbounded aggregate through the driver. [[fts2Compact]] is what
     * returns the index to the None tier. */
   private[graft] def fts2TombMaxOpt(s: SparkSession, ns: String): Option[DataFrame] =
-    fts2TombMaxOpt(s, ns, ServePin.live(s, ns))
+    fts2TombMaxOpt(s, ServePin.live(s, ns))
 
-  private[graft] def fts2TombMaxOpt(s: SparkSession, ns: String,
+  private[graft] def fts2TombMaxOpt(s: SparkSession,
       pin: ServePin): Option[DataFrame] = {
     // sized AND read at the pin's version: the live registry may
     // already be compacted-clean while the pinned cut still carries
@@ -692,10 +692,10 @@ object Engine3 {
   private[graft] def fts2Bm25(s: SparkSession, ns: String,
       terms: Seq[String]): DataFrame = {
     val pin = ServePin.of(s, ns)
-    fts2Bm25At(s, ns, terms, fts2TombMaxOpt(s, ns, pin), pin)
+    fts2Bm25At(terms, fts2TombMaxOpt(s, pin), pin)
   }
 
-  private[graft] def fts2Bm25At(s: SparkSession, ns: String, terms: Seq[String],
+  private[graft] def fts2Bm25At(terms: Seq[String],
       tombMax: Option[DataFrame], pin: ServePin): DataFrame = {
     val post = fts2Surviving(
       pin.table("fts2_post").where(col("tok").isin(terms: _*)), tombMax)
@@ -718,8 +718,8 @@ object Engine3 {
     // ONE pinned cut for the whole serve: postings, positions,
     // constants, and tombstones all resolve at the same fold boundary
     val pin = ServePin.of(s, ns)
-    val tombMax = fts2TombMaxOpt(s, ns, pin)
-    val top = fts2Bm25At(s, ns, terms, tombMax, pin)
+    val tombMax = fts2TombMaxOpt(s, pin)
+    val top = fts2Bm25At(terms, tombMax, pin)
       .orderBy(desc("score_micro"), col("doc_id"))
       .limit(20)
     val posT = pin.table("fts2_pos")
@@ -792,7 +792,7 @@ object Engine3 {
       .withColumn("cos", expr("dot / sqrt(qn2 * cn2)"))
       .orderBy(desc("cos"), col("cid")).limit(2)
       .select("cid").collect().map(r => Long.box(r.getLong(0))).toSeq
-    val tombMax = Engine2.ann3TombMaxOpt(s, ann, annPin)
+    val tombMax = Engine2.ann3TombMaxOpt(s, annPin)
     val post = Engine2.ann3Surviving(
       annPin.table("ann3_post").where(col("list_id").isin(probed: _*)),
       tombMax)
@@ -844,7 +844,7 @@ object Engine3 {
       "q161_fts_index_serve",
       // tok IN (...) → parquet pushdown + per-file range disproof over
       // the token-clustered files (inside fts2Bm25)
-      (s, dir) => fts2Bm25(s, ftsServe, Seq("join", "scan", "hash"))
+      (s, _) => fts2Bm25(s, ftsServe, Seq("join", "scan", "hash"))
         .orderBy(desc("score_micro"), col("doc_id"))
         .limit(20),
       // the index build is deterministic, so serving from it ≡ q71's
@@ -880,7 +880,7 @@ object Engine3 {
     // oracle rebuilds positions relationally from the raw text.
     QueryDef(
       "q162_fts_phrase",
-      (s, dir) => {
+      (s, _) => {
         val pos = s.table(s"$ftsServe.fts2_pos")
         val first = pos.where(col("tok") === "hash")
           .select(col("doc_id"), col("pos"))
@@ -1486,7 +1486,7 @@ object Engine3 {
     // must be as if the index were rebuilt from scratch.
     QueryDef(
       "q171_fts_mutations",
-      (s, dir) => {
+      (s, _) => {
         val ns2 = "gcat.fts3"
         val v1 = s.table(s"$ns2.fts2_meta")
           .agg(max(col("indexed_version"))).first().getLong(0)
@@ -1777,7 +1777,7 @@ object Engine3 {
     // LOG costs barely more than its most expensive member.
     QueryDef(
       "q176_fts_batch_serve",
-      (s, dir) => {
+      (s, _) => {
         import s.implicits._
         val queries = Seq(
           0L -> Seq("join", "scan", "hash"),
@@ -1849,7 +1849,7 @@ object Engine3 {
     // like q162.
     QueryDef(
       "q177_fts_proximity",
-      (s, dir) => {
+      (s, _) => {
         val pos = s.table(s"$ftsServe.fts2_pos")
         val a = pos.where(col("tok") === "hash")
           .select(col("doc_id"), col("pos").as("p1"))
@@ -1890,7 +1890,7 @@ object Engine3 {
     // side is one term's doc list — never a corpus scan, no global window.
     QueryDef(
       "q178_fts_boolean",
-      (s, dir) => {
+      (s, _) => {
         val required = Seq("scan", "filter")
         val excluded = "hash"
         val post = s.table(s"$ftsServe.fts2_post")
@@ -1948,7 +1948,7 @@ object Engine3 {
     // adjacent files.
     QueryDef(
       "q180_fts_prefix",
-      (s, dir) =>
+      (s, _) =>
         s.table(s"$ftsServe.fts2_post")
           .where(col("tok").startsWith("sca"))
           .groupBy(col("tok"))
@@ -2019,7 +2019,7 @@ object Engine3 {
     // matches by df so the suggestion ranking is corpus-grounded.
     QueryDef(
       "q182_fts_fuzzy_term",
-      (s, dir) => {
+      (s, _) => {
         val query = "sow"
         val qVariants = (query +: query.indices.map(i =>
           query.substring(0, i) + query.substring(i + 1))).distinct
@@ -2068,7 +2068,7 @@ object Engine3 {
     // lookup is a point join + one pruned postings read.
     QueryDef(
       "q183_fts_fuzzy_maintained",
-      (s, dir) => {
+      (s, _) => {
         val ns2 = "gcat.fts7"
         val v1 = s.table(s"$ns2.fts2_meta")
           .agg(max(col("indexed_version"))).first().getLong(0)
@@ -2161,7 +2161,7 @@ object Engine3 {
     // coordinating with each other.
     QueryDef(
       "q184_hybrid_maintained",
-      (s, dir) =>
+      (s, _) =>
         hybridServe(s, "gcat.hfts", "gcat.hann", Seq("join", "scan", "hash")),
       // both rankings replayed from the POST-MUTATION state: text from
       // the mutated corpus, ADC with the ORIGINAL frozen quantizer
@@ -2962,7 +2962,7 @@ object Engine3 {
       .withColumn("dist", levenshtein(col("tok"), lit(query)))
       .where(col("dist") <= 1)
       .collect().map(r => (r.getString(0), r.getInt(1)))
-    val tombMax = fts2TombMaxOpt(s, ns, pin)
+    val tombMax = fts2TombMaxOpt(s, pin)
     val live = fts2Surviving(
       pin.table("fts2_post")
         .where(col("tok").isin(cands.map(_._1): _*)), tombMax)

@@ -319,7 +319,7 @@ object Compaction {
         // shiftleft past 63 would silently wrap mod 64 and scramble the curve
         val bits = math.min(16, 63 / k)
         val laneMax = (1 << bits) - 1
-        val lanes = zorderBy.zipWithIndex.map { case (c, j) =>
+        val lanes = zorderBy.indices.map { j =>
           val (mn, mx) =
             if (mm.isNullAt(2 * j)) (0d, 1d) // all-null column: one lane value
             else (mm.getDouble(2 * j), mm.getDouble(2 * j + 1))
@@ -359,33 +359,22 @@ object Compaction {
       }.collect()
 
     // drop files from failed/speculative attempts of this compaction
-    val writtenNames = written.map(_._1.split('/').last).toSet
-    val it2 = fs.listFiles(dataDir, true)
-    val stale = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it2.hasNext) {
-      val p0 = it2.next().getPath
-      if (p0.getName.contains(writeId) && !writtenNames.contains(p0.getName)) stale += p0
-    }
-    stale.foreach(fs.delete(_, false))
+    val writtenRels = written.map(_._1)
+    Commit.sweep(fs, dataDir, writeId, writtenRels)
 
     // swap: re-point the stats registry away from the originals. The
     // compacted-away files are NOT physically deleted — earlier snapshots
     // still reference them (time travel); vacuum reclaims them later.
+    // Conflict baseline: a concurrent commit that replaced one of our
+    // inputs (COW delete, another compaction), or a merge-on-read
+    // mutation that landed deletes our rewrite did not apply (the
+    // rewrite's newer seq would let the rows escape them) — registering
+    // the output would resurrect rows another committer just removed.
     val victimRels = victims.map(TableStats.keyOf(table.dataDir, _)).toSet
-    TableStats.withLock(fs, dataDir) {
-      val base = TableStats.read(fs, dataDir)
-      val newDeletes = base.keysIterator
-        .filter(GraftDeletes.isDeleteRel).toSet -- baseDeleteRels
-      if (!victimRels.forall(base.contains) || newDeletes.nonEmpty) {
-        // a concurrent commit replaced one of our inputs (COW delete,
-        // another compaction) — or a merge-on-read mutation landed
-        // deletes our rewrite did not apply (the rewrite's newer seq
-        // would let the rows escape them): registering the output would
-        // resurrect rows another committer just removed — abort
-        written.foreach { case (rel, _) => fs.delete(new Path(dataDir, rel), false) }
-        throw new IllegalStateException(
-          "graft: compaction lost a race with a concurrent commit; no changes applied")
-      }
+    // rows are MOVED, not changed: CDC feeds skip this version entirely
+    Commit.run(fs, dataDir,
+      Some(Commit.Check("compaction", writtenRels, victimRels, baseDeleteRels)),
+      kind = Some(ChangeLog.Maintenance)) { base =>
       val next = base -- victimRels ++ written
       // drop every delete entry no surviving data file still needs: the
       // rewrite applied it to the victims, so it is live only for data
@@ -398,10 +387,7 @@ object Compaction {
         !remaining.valuesIterator.exists(e => e.seq >= 0 && e.seq < dseq &&
           touchedByDeletes(e))
       }
-      // rows are MOVED, not changed: CDC feeds skip this version entirely
-      // (marker committed BEFORE the swap inside the chokepoint)
-      TableStats.write(fs, dataDir, next -- dropped,
-        kind = Some(ChangeLog.Maintenance))
+      Some(next -- dropped)
     }
     // a clone whose last external entry was just rewritten is now a
     // fully independent table: release the vacuum pin it held on its

@@ -883,7 +883,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ViewCatalog
       ident: Identifier,
       schema: StructType,
       props: Map[String, String],
-      partCols: Seq[String] = Seq.empty): Unit = {
+      partCols: Seq[String]): Unit = {
     // refuse reserved metadata/change-feed column names at every
     // schema-writing path: CREATE, CTAS commit, ADD/RENAME COLUMN
     GraftTable.requireNoReservedColumns(schema)

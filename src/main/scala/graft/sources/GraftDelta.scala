@@ -100,59 +100,33 @@ final class GraftDeltaWrite(
       partitionCols, writeId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
-    val committed: Map[String, TableStats.Entry] = messages.collect {
-      case m: GraftCommitMessage => m.files
-    }.flatten.toMap
-    // drop files from failed/speculative attempts of THIS write (data
-    // part-files and delete fragments both carry the writeId)
-    val committedNames = committed.keysIterator.map(_.split('/').last).toSet
-    TableStats.listAllFiles(fs, dir)
-      .filter(p => p.getName.contains(writeId) &&
-        !committedNames.contains(p.getName))
-      .foreach(fs.delete(_, false))
-
-    TableStats.withLock(fs, dir) {
-      val live = TableStats.read(fs, dir)
-      // Serializable-commit conflict detection against the scan's
-      // baseline. (a) files GONE: a COW rewrite / compaction / truncate
-      // replaced rows we read — our deletes still apply by key, but an
-      // UPDATE's new values were derived from a state another committer
-      // just changed, and a truncate must not be resurrected into.
-      // (b) delete files ADDED: a concurrent merge-on-read mutation —
-      // our inserts commit at a higher seq and would escape its deletes.
-      // Both are the classic write-write race: abort, drop our output.
-      val base = op.baseManifest
-      val removed = base -- live.keySet
-      val addedDeletes =
-        live.keysIterator.filter(GraftDeletes.isDeleteRel).toSet -- base
-      if (removed.nonEmpty || addedDeletes.nonEmpty) {
-        committed.keys.foreach(rel => fs.delete(new Path(dir, rel), false))
-        throw new IllegalStateException(
-          s"graft: merge-on-read ${op.command()} lost a race with a " +
-            s"concurrent commit (${removed.size} file(s) left / " +
-            s"${addedDeletes.size} delete file(s) entered the manifest); " +
-            "no changes applied — retry the statement")
-      }
-      // NO-MATCH fast path (after the race checks — serializability is
-      // decided first, exactly as for a matching mutation): no delete
-      // fragments and no data files means the statement matched nothing,
-      // the table is bit-identical, and minting a version would be pure
-      // churn (a guarded per-run maintenance statement would force every
-      // incremental consumer through an empty interval forever)
-      if (committed.nonEmpty) TableStats.write(fs, dir, live ++ committed)
+    val fs = dir.getFileSystem(new Configuration())
+    val committed = Commit.files(messages)
+    // data part-files and delete fragments both carry the writeId
+    Commit.sweep(fs, dir, writeId, committed.keys)
+    // Conflict baseline = the manifest the scan read. A file GONE means a
+    // COW rewrite / compaction / truncate replaced rows we read: our
+    // deletes still apply by key, but an UPDATE's new values were derived
+    // from a state another committer just changed, and a truncate must
+    // not be resurrected into. A delete file ADDED means a concurrent
+    // merge-on-read mutation: our inserts commit at a higher seq and
+    // would escape its deletes.
+    val base = op.baseManifest
+    Commit.run(fs, dir, Some(Commit.Check(s"merge-on-read ${op.command()}",
+      committed.keys, base, base.filter(GraftDeletes.isDeleteRel)))) { live =>
+      // NO-MATCH: no delete fragments and no data files means the
+      // statement matched nothing and the table is bit-identical; minting
+      // a version would be pure churn (a guarded per-run maintenance
+      // statement would force every incremental consumer through an
+      // empty interval forever)
+      if (committed.nonEmpty) Some(live ++ committed) else None
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
-    TableStats.listAllFiles(fs, dir)
-      .filter(_.getName.contains(writeId))
-      .foreach(fs.delete(_, false))
+    Commit.sweep(dir.getFileSystem(new Configuration()), dir, writeId)
   }
 }
 

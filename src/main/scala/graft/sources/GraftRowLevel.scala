@@ -101,48 +101,31 @@ final class GraftReplaceDataWrite(
       dataDir, partitionCols, writeId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
-    val committed: Map[String, TableStats.Entry] = messages.collect {
-      case m: GraftCommitMessage => m.files
-    }.flatten.toMap
-    val committedNames = committed.keysIterator.map(_.split('/').last).toSet
-    // drop files from failed/speculative attempts of THIS write
-    val it = fs.listFiles(dir, true)
-    val toCheck = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) toCheck += it.next().getPath
-    toCheck.foreach { p =>
-      if (p.getName.contains(writeId) && !committedNames.contains(p.getName))
-        fs.delete(p, false)
-    }
+    val fs = dir.getFileSystem(new Configuration())
+    val committed = Commit.files(messages)
+    Commit.sweep(fs, dir, writeId, committed.keys)
     // swap: drop the rewritten groups from the manifest, register the
     // replacements. The replaced files are NOT physically deleted — they
     // stay reachable through earlier snapshots (time travel) until
     // vacuum reclaims them; manifest-first listing never surfaces them.
-    val affected = op.affectedFiles
-    val affectedRels = affected.map(TableStats.keyOf(dataDir, _))
+    val affectedRels = op.affectedFiles.map(TableStats.keyOf(dataDir, _))
     // NO-MATCH fast path: the predicate pruned every candidate group —
     // nothing was read, rewritten, or removed, so the table is
     // bit-identical and committing would only mint a no-op version (a
     // guarded per-run maintenance statement would otherwise churn the
     // version chain and force every incremental consumer through an
-    // empty interval forever). The serializable-commit race checks below
-    // still run — a no-op decides its fate the same way a matching
-    // mutation does — but no change dir, no marker, and no snapshot are
-    // published.
+    // empty interval forever). The race is still decided first, as for
+    // a matching mutation, but no change dir, no marker, and no snapshot
+    // are published.
     val noop = affectedRels.isEmpty && committed.isEmpty
     // Record this mutation's per-row delta (the CDC change files) BEFORE
     // taking the lock: one diff join over exactly the group this rewrite
     // already paid to rewrite. The pre-lock manifest read races only with
-    // commits the conflict check below aborts on anyway; the staging dir
+    // commits the conflict check aborts on anyway; the staging dir
     // becomes visible to feeds only via the rename under the lock.
-    val propsMap = {
-      import scala.jdk.CollectionConverters._
-      props.asScala.toMap
-    }
     val staging: Option[Path] =
-      if (noop || !ChangeLog.recordingEnabled(propsMap)) None
+      if (noop || !ChangeLog.recordingEnabled(props.asScala.toMap)) None
       else {
         val pre = TableStats.read(fs, dir)
         val oldFiles = affectedRels.toSeq.sorted.flatMap(rel =>
@@ -167,84 +150,60 @@ final class GraftReplaceDataWrite(
           oldFiles, committed.keys.toSeq.sorted.map(rel => s"$dataDir/$rel"),
           deleteKeys, op.command(), writeId)
       }
-    def dropStaging(): Unit =
-      staging.foreach(p => try fs.delete(p, true) catch { case _: Exception => () })
-    TableStats.withLock(fs, dir) {
-      val live = TableStats.read(fs, dir)
-      // optimistic concurrency: if a concurrent commit (compaction swap,
-      // another COW, partition delete, truncate) removed one of the files
-      // this rewrite read, its replacement may hold rows this operation
-      // deleted or updated — registering our output beside it would
-      // duplicate survivors and resurrect deleted rows. Abort instead
-      // (the standard serializable-commit conflict), dropping our output.
-      val missing = affectedRels.filterNot(live.contains)
-      if (missing.nonEmpty) {
-        committed.keys.foreach(rel => fs.delete(new Path(dir, rel), false))
-        dropStaging()
-        throw new IllegalStateException(
-          s"graft: row-level ${op.command()} lost a race with a concurrent " +
-            s"commit (${missing.size} of its input file(s) left the manifest); " +
-            "no changes applied — retry the statement")
+    // the version whose change dir this commit renamed into place: a
+    // failed publish must un-publish it — a marker/change-dir left at a
+    // version that was never committed would misclassify the NEXT commit
+    // at v as a COW and silently feed stale change rows (feeds failing
+    // loudly on an unmarked rewrite is the safe failure mode; the
+    // chokepoint also clears stray markers when an unmarked commit
+    // mints v)
+    var published: Option[Long] = None
+    def cleanup(): Unit = try {
+      staging.foreach(fs.delete(_, true))
+      published.foreach { v =>
+        fs.delete(ChangeLog.markerPath(dir, v), false)
+        fs.delete(ChangeLog.changeDataDir(dir, v), true)
       }
-      // a merge-on-read mutation committed meanwhile: its equality
-      // deletes target rows this rewrite read, but our output's seq is
-      // NEWER than the delete's, so the carried-over rows would escape
-      // it — same lost race, same answer
-      val newDeletes = live.keysIterator
-        .filter(GraftDeletes.isDeleteRel).toSet -- op.baseDeletes
-      if (newDeletes.nonEmpty) {
-        committed.keys.foreach(rel => fs.delete(new Path(dir, rel), false))
-        dropStaging()
-        throw new IllegalStateException(
-          s"graft: row-level ${op.command()} lost a race with a concurrent " +
-            s"merge-on-read mutation (${newDeletes.size} delete file(s) " +
-            "entered the manifest); no changes applied — retry the statement")
-      }
-      if (noop) return // race checks passed; nothing to publish
-      // Publish the recorded delta and the kind marker BEFORE the manifest
-      // swap (the commit point). A rename/marker failure here aborts a
-      // not-yet-committed statement — the reverse order would leave the
-      // mutation durable while reporting the statement failed, with no
-      // marker for feeds. The version is precomputed under the lock, so
-      // TableStats.write below records exactly it.
-      val v = Snapshots.nextVersion(fs, dir)
-      staging.foreach { st =>
-        if (!fs.rename(st, ChangeLog.changeDataDir(dir, v))) {
-          committed.keys.foreach(rel => fs.delete(new Path(dir, rel), false))
-          dropStaging()
-          throw new IllegalStateException(
-            s"graft: could not publish change files for v$v of $dataDir; " +
-              "no changes applied — retry the statement")
+    } catch { case _: Exception => () }
+    // Conflict baseline: the files this rewrite read, and the delete
+    // files its scan saw. A file gone means its replacement may hold
+    // rows this operation deleted or updated (registering our output
+    // beside it would duplicate survivors and resurrect deleted rows); a
+    // delete file added targets rows this rewrite carried over at a
+    // newer seq, which would escape it.
+    val recorded = Commit.run(fs, dir, Some(Commit.Check(s"row-level ${op.command()}",
+        committed.keys, affectedRels, op.baseDeletes)),
+      kind = Some(ChangeLog.Cow), cleanup = () => cleanup()) { live =>
+      if (noop) None
+      else {
+        // Publish the recorded delta BEFORE the manifest swap (the commit
+        // point; the Cow marker also lands before it, inside
+        // TableStats.write). A rename failure here aborts a not-yet-
+        // committed statement — the reverse order would leave the mutation
+        // durable while reporting the statement failed, with no marker
+        // for feeds. The version is precomputed under the lock, so the
+        // publish records exactly it.
+        val v = Snapshots.nextVersion(fs, dir)
+        staging.foreach { st =>
+          if (!fs.rename(st, ChangeLog.changeDataDir(dir, v))) {
+            Commit.drop(fs, dir, committed.keys)
+            throw new IllegalStateException(
+              s"graft: could not publish change files for v$v of $dataDir; " +
+                "no changes applied — retry the statement")
+          }
         }
-      }
-      try {
-        // the Cow marker commits BEFORE the swap inside the chokepoint
-        val recorded = TableStats.write(fs, dir, live -- affectedRels ++ committed,
-          kind = Some(ChangeLog.Cow))
-        require(recorded == v, s"graft: commit recorded v$recorded, expected v$v")
-      } catch { case e: Throwable =>
-        // un-publish: a marker/change-dir left at a version that was never
-        // committed would misclassify the NEXT commit at v as a COW and
-        // silently feed stale change rows — feeds failing loudly on an
-        // unmarked rewrite is the safe failure mode (the chokepoint also
-        // clears stray markers when an unmarked commit mints v)
-        try {
-          fs.delete(ChangeLog.markerPath(dir, v), false)
-          fs.delete(ChangeLog.changeDataDir(dir, v), true)
-        } catch { case _: Exception => () }
-        throw e
+        published = Some(v)
+        Some(live -- affectedRels ++ committed)
       }
     }
+    require(recorded == published,
+      s"graft: commit recorded ${recorded.mkString} (expected ${published.mkString})")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
-    val it = fs.listFiles(dir, true)
-    val paths = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) paths += it.next().getPath
-    paths.foreach(p => if (p.getName.contains(writeId)) fs.delete(p, false))
+    val fs = dir.getFileSystem(new Configuration())
+    Commit.sweep(fs, dir, writeId)
     // a staged-but-unpublished change diff dies with the write
     try fs.delete(new Path(ChangeLog.changesDir(dir), s".staging-$writeId"), true)
     catch { case _: Exception => () }

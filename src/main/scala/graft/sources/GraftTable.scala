@@ -962,7 +962,7 @@ object TableStats {
           rel -> Entry(rows.toLong, parseCols(colspec), bytes.toLong, seq.toLong,
             sorted == "1", Some(parseKv(nulls)), Some(parseKv(sums)),
             if (blooms == "-") None else Some(parseKvStr(blooms)), sortedBy)
-        case other =>
+        case _ =>
           throw new IllegalStateException(s"bad stats line: $line")
       }
 
@@ -980,7 +980,8 @@ object TableStats {
   /** Recursive file listing with the local-FS rename-race retry: a
     * concurrent committer's registry rename-overwrite can make a
     * just-listed path vanish before the lister stats it — transient by
-    * construction. Shared by every commit-path lister. */
+    * construction. A missing `dir` lists as empty (a write whose tasks
+    * produced no file never created it). Used by [[Commit.sweep]]. */
   def listAllFiles(fs: FileSystem, dir: Path): Seq[Path] = {
     var attempt = 0
     while (true) {
@@ -991,6 +992,7 @@ object TableStats {
         return out.toSeq
       } catch {
         case e: Exception =>
+          if (!fs.exists(dir)) return Nil
           attempt += 1
           if (attempt >= 5) throw e
           Thread.sleep(50L * attempt)
@@ -3304,17 +3306,14 @@ final class GraftStreamingWrite(
     (d.getFileSystem(new Configuration()), d)
   }
 
-  private def filesOf(messages: Array[WriterCommitMessage]): Seq[(String, TableStats.Entry)] =
-    messages.collect { case m: GraftCommitMessage => m.files }.toSeq.flatten
-
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val (fs, dir) = open()
     val marker = new Path(dir, s"${TableStats.CommitsDir}/$queryId-e$epochId")
-    val committed = filesOf(messages)
+    val committed = Commit.files(messages)
     if (fs.exists(marker)) {
       // epoch already durable from a previous run: this attempt re-wrote
       // the same input batch — its files are duplicates, drop them...
-      committed.foreach { case (rel, _) => fs.delete(new Path(dir, rel), false) }
+      Commit.drop(fs, dir, committed.keys)
       // ...and repair the registry from the marker's file list if the
       // original commit crashed between marker and registration (without
       // this, those files would stay invisible forever — lost rows).
@@ -3328,29 +3327,26 @@ final class GraftStreamingWrite(
       val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
       val original = TableStats.deserialize(text)
-      TableStats.withLock(fs, dir) {
-        val stats = TableStats.read(fs, dir)
+      Commit.run(fs, dir) { live =>
         lazy val tombstoned = Snapshots.everRecorded(fs, dir)
         val missing = original.filter { case (rel, _) =>
-          !stats.contains(rel) && fs.exists(new Path(dir, rel)) &&
+          !live.contains(rel) && fs.exists(new Path(dir, rel)) &&
             !tombstoned.contains(rel) }
-        if (missing.nonEmpty) TableStats.write(fs, dir, stats ++ missing)
+        if (missing.nonEmpty) Some(live ++ missing) else None
       }
     } else {
       fs.mkdirs(marker.getParent)
       val out = fs.create(marker, true)
-      try out.write(TableStats.serialize(committed.toMap)
+      try out.write(TableStats.serialize(committed)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      TableStats.withLock(fs, dir) {
-        TableStats.write(fs, dir, TableStats.read(fs, dir) ++ committed)
-      }
+      Commit.run(fs, dir)(live => Some(live ++ committed))
     }
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val (fs, dir) = open()
-    filesOf(messages).foreach { case (rel, _) => fs.delete(new Path(dir, rel), false) }
+    Commit.drop(fs, dir, Commit.files(messages).keys)
   }
 }
 
@@ -3397,57 +3393,20 @@ final class GraftBatchWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(schema, props, dataDir, partitionCols, writeId)
 
-  private def eachFile(f: (FileSystem, Path) => Unit): Unit = {
-    val conf = new Configuration()
-    val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(dir)) {
-      // on a local FS a concurrent committer's registry rename-overwrite
-      // can make a just-listed path vanish before the lister stats it —
-      // transient by construction, retry briefly (same discipline as the
-      // streaming source's visibleFiles)
-      val paths = scala.collection.mutable.ArrayBuffer[Path]()
-      var attempt = 0
-      var done = false
-      while (!done) {
-        try {
-          paths.clear()
-          val it = fs.listFiles(dir, true)
-          while (it.hasNext) paths += it.next().getPath
-          done = true
-        } catch {
-          case e: Exception =>
-            attempt += 1
-            if (attempt >= 5) throw e
-            Thread.sleep(20L * attempt)
-        }
-      }
-      paths.foreach(p => f(fs, p))
-    }
-  }
-
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     require(!wapReplace || wapId.isDefined,
       "graft: wap.replace marks the MODE of a staged commit and needs wap.id; " +
         "without one the write would land live as a plain append")
-    val committed: Map[String, TableStats.Entry] = messages.collect {
-      case m: GraftCommitMessage => m.files
-    }.flatten.toMap
-    val committedNames = committed.keysIterator.map(_.split('/').last).toSet
+    val committed = Commit.files(messages)
+    val dir = new Path(dataDir)
+    val fs = dir.getFileSystem(new Configuration())
     // Every committed task attempt wrote uniquely-named files (taskId in
     // the name); files carrying this writeId that are NOT in the commit
     // messages come from failed/speculative attempts — drop them.
     // Truncate-overwrite does NOT physically delete prior files: the
     // registry rewrite below (base = empty) makes them invisible, and
     // they stay reachable through earlier snapshots until vacuum.
-    eachFile { (fs, p) =>
-      val n = p.getName
-      if (n.contains(writeId) && !committedNames.contains(n)) fs.delete(p, false)
-    }
-    // Refresh the per-file row-count cache from the writers' own counts.
-    val conf = new Configuration()
-    val dir = new Path(dataDir)
-    val fs = dir.getFileSystem(conf)
+    Commit.sweep(fs, dir, writeId, committed.keys)
     import GraftBatchWrite._
     // first catalog-free write into a BARE directory: persist _meta.yml
     // so the directory reads back as a self-describing graft table
@@ -3493,8 +3452,11 @@ final class GraftBatchWrite(
       }.toMap)
     }
 
-    TableStats.withLock(fs, dir) {
-      val live = TableStats.read(fs, dir)
+    // non-append modes are a data swap the feeds replay as
+    // delete(removed rows) + insert(added rows) — see
+    // [[ChangeLog.Replace]]; the marker commits BEFORE the swap
+    Commit.run(fs, dir,
+      kind = if (mode != Append) Some(ChangeLog.Replace) else None) { live =>
       val base: Map[String, TableStats.Entry] = mode match {
         case Append => live
         case Truncate => Map.empty
@@ -3536,16 +3498,14 @@ final class GraftBatchWrite(
             }
           }
       }
-      // non-append modes are a data swap the feeds replay as
-      // delete(removed rows) + insert(added rows) — see
-      // [[ChangeLog.Replace]]; the marker commits BEFORE the swap
-      TableStats.write(fs, dir, base ++ committed,
-        kind = if (mode != Append) Some(ChangeLog.Replace) else None)
+      Some(base ++ committed)
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    eachFile((fs, p) => if (p.getName.contains(writeId)) fs.delete(p, false))
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val dir = new Path(dataDir)
+    Commit.sweep(dir.getFileSystem(new Configuration()), dir, writeId)
+  }
 }
 
 /** files: (path relative to the data dir, stats entry) per file this

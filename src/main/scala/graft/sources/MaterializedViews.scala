@@ -164,7 +164,7 @@ object MaterializedViews {
         val cols = aggExprs.map {
           case ar: AttributeReference if groupIds.contains(ar.exprId) =>
             AggCol("group", ar.name, ar.name)
-          case al @ Alias(ar: AttributeReference, out) if groupIds.contains(ar.exprId) =>
+          case Alias(ar: AttributeReference, out) if groupIds.contains(ar.exprId) =>
             AggCol("group", ar.name, out)
           case Alias(ae: AggregateExpression, out) =>
             if (ae.isDistinct) fail(s"$out is DISTINCT")

@@ -390,8 +390,8 @@ object Transactions {
           }.toMap
         }
       } catch {
-        case e @ (_: org.apache.hadoop.fs.ChecksumException |
-                  _: java.io.FileNotFoundException) if retriesLeft > 0 =>
+        case _: org.apache.hadoop.fs.ChecksumException |
+             _: java.io.FileNotFoundException if retriesLeft > 0 =>
           Thread.sleep(20)
           attempt(retriesLeft - 1)
       }

@@ -1408,7 +1408,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val pre = serve()
     def liveServe(): Seq[(Long, Long)] =
-      graft.queries.Engine3.fts2Bm25At(spark, ns, terms,
+      graft.queries.Engine3.fts2Bm25At(terms,
         graft.queries.Engine3.fts2TombMaxOpt(spark, ns),
         graft.queries.Engine3.ServePin.live(spark, ns))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -1528,8 +1528,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       import scala.jdk.CollectionConverters._
       cuts.asScala.toSeq.map { cut =>
         val pin = new graft.queries.Engine3.ServePin(spark, ns, cut)
-        canon(graft.queries.Engine3.fts2Bm25At(spark, ns, terms,
-          graft.queries.Engine3.fts2TombMaxOpt(spark, ns, pin), pin).collect())
+        canon(graft.queries.Engine3.fts2Bm25At(terms,
+          graft.queries.Engine3.fts2TombMaxOpt(spark, pin), pin).collect())
       }.toSet
     }
     import scala.jdk.CollectionConverters._
